@@ -3278,11 +3278,19 @@ def _mp4_sample_group_rows(g: int) -> list[tuple[int, str, bytes, str]]:
         ]
 
 
+def _require_groups(groups: int) -> None:
+    # one spark.range partition per group, and Spark rejects a range
+    # with zero partitions
+    if groups < 1:
+        raise ValueError(f"groups must be >= 1, got {groups}")
+
+
 def synthetic_mp4_sample_table(spark, groups: int = 10) -> DataFrame:
     """DataFrame form of :func:`synthetic_mp4_sample_rows`, generated
     ON EXECUTORS (one group per ``spark.range`` partition — the
     synthetic_near_dup_video_table posture; same determinism/retry
     and no-caching contract; byte-identity pytest-pinned)."""
+    _require_groups(groups)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -3388,6 +3396,7 @@ def synthetic_near_dup_video_table(spark, groups: int = 12) -> DataFrame:
     invocation — nothing is cached or staged across runs; rows are
     byte-identical to the driver form (pytest-pinned), and the
     generator is deterministic per group id, so task retries are safe."""
+    _require_groups(groups)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

@@ -34,6 +34,18 @@ def _process_warehouse_dir() -> str:
     return _WAREHOUSE_DIR
 
 
+def _env_bool(name: str, default: str) -> str:
+    """A boolean env knob as the lowercase string a Spark conf takes.
+    Accepts ``true``/``false`` in any case; anything else raises here,
+    naming the variable, instead of failing inside the JVM at session
+    build."""
+    raw = os.environ.get(name, default)
+    value = raw.lower()
+    if value not in ("true", "false"):
+        raise ValueError(f"{name} must be 'true' or 'false', got {raw!r}")
+    return value
+
+
 def get_spark(
     app_name: str = "marketing_spark_engine",
     master: str | None = None,
@@ -58,6 +70,7 @@ def get_spark(
     n_shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
+    prefer_smj = _env_bool("SPARK_GRAFT_PREFER_SMJ", "false")
 
     # glibc malloc tuning for the numpy Arrow workers (guide §4.5's
     # "heavyweight init once per task" applied to MEMORY): by default
@@ -118,7 +131,7 @@ def get_spark(
         # knob restores the Spark default per deployment.
         .config(
             "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
+            prefer_smj,
         )
         # The driver's testdata stores events.ts as TIMESTAMP(NANOS), which
         # Spark's parquet reader refuses; read as long and convert in

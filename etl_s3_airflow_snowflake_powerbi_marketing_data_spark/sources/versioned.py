@@ -113,19 +113,28 @@ def _publish(path: str, manifest) -> int:
     raise RuntimeError(f"could not win a commit after {_MAX_COMMIT_RETRIES} tries")
 
 
-def write_version(df: DataFrame, path: str, mode: str = "replace") -> int:
+def write_version(
+    df: DataFrame,
+    path: str,
+    mode: str = "replace",
+    options: dict[str, str] | None = None,
+) -> int:
     """Commit ``df`` as a new snapshot; returns the new version.
 
     ``mode='replace'``: the new snapshot is exactly ``df``.
     ``mode='append'``: the new snapshot is the previous one plus ``df``
     (manifest = old prefixes + the new prefix; no data rewritten).
+    ``options``: parquet writer options for this commit's files (codec,
+    page version); the session defaults apply when omitted.
     """
     if mode not in ("replace", "append"):
         raise ValueError(f"unknown mode {mode!r}")
     nonce = uuid.uuid4().hex[:12]
     next_hint = (table_versions(path) or [0])[-1] + 1
     prefix = os.path.join("data", f"v{next_hint}-{nonce}")
-    df.write.mode("errorifexists").parquet(os.path.join(path, prefix))
+    df.write.mode("errorifexists").options(**(options or {})).parquet(
+        os.path.join(path, prefix)
+    )
     if mode == "replace":
         return _publish(path, {"prefixes": [prefix], "mode": mode})
 

@@ -369,3 +369,106 @@ def test_publish_catalog_analyze_records_cbo_stats(spark, warehouse):
     desc = spark.sql("DESCRIBE TABLE EXTENDED wh_f_events").collect()
     stats = [r for r in desc if r["col_name"] == "Statistics"]
     assert stats and "rows" in stats[0]["data_type"]
+
+
+def _column_chunks(table_dir):
+    """Every parquet column chunk under a table dir (plain, versioned
+    ``data/v*`` prefixes, or ``event_date=*`` partitions)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for root, _, files in os.walk(table_dir):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            meta = pq.ParquetFile(os.path.join(root, name)).metadata
+            for g in range(meta.num_row_groups):
+                rg = meta.row_group(g)
+                yield from (rg.column(c) for c in range(rg.num_columns))
+
+
+def _assert_warehouse_encoding(table_dir):
+    chunks = list(_column_chunks(table_dir))
+    assert chunks, table_dir
+    delta_packed = 0
+    for ch in chunks:
+        where = (table_dir, ch.path_in_schema, ch.encodings)
+        assert ch.compression == "ZSTD", where
+        if ch.physical_type != "INT64":
+            continue
+        enc = set(ch.encodings)
+        # v2 pages: int64 data is DELTA_BINARY_PACKED unless the writer
+        # kept a dictionary (RLE_DICTIONARY, the v2 dictionary encoding;
+        # v1 pages would say PLAIN or PLAIN_DICTIONARY)
+        if "RLE_DICTIONARY" in enc:
+            assert enc <= {"PLAIN", "RLE_DICTIONARY", "DELTA_BINARY_PACKED"}, where
+        else:
+            assert enc == {"DELTA_BINARY_PACKED"}, where
+            delta_packed += 1
+    # every table carries a unique key or surrogate key column
+    assert delta_packed, table_dir
+
+
+def _day2_source(spark, tmp_path):
+    import os
+    import shutil
+
+    events = load_table(spark, SF, "events")
+    changed = (
+        events.orderBy("event_id")
+        .limit(1)
+        .withColumn("value", F.col("value") + 1000.0)
+    )
+    max_id = events.agg(F.max("event_id")).first()[0]
+    new = changed.withColumn("event_id", F.lit(max_id + 1).cast("long"))
+    day2 = str(tmp_path / "day2src")
+    os.makedirs(day2)
+    changed.unionByName(new).write.parquet(f"{day2}/events.parquet")
+    shutil.copy(f"{SF}/part.parquet", f"{day2}/part.parquet")
+    return day2
+
+
+def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
+    """Every warehouse table file is zstd with v2 data pages — plain and
+    versioned warehouses over two days, the materialized ``kpi_*``
+    views, the partitioned fact and the daily rollup — while a
+    ``sources.versioned`` dedup-store commit keeps the session's
+    default codec and v1 pages."""
+    import os
+
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import (
+        marketing,
+    )
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    day2 = _day2_source(spark, tmp_path)
+    plain, versioned = str(tmp_path / "plain"), str(tmp_path / "versioned")
+    for day in (SF, day2):
+        pipeline.run_daily_pipeline(spark, day, plain, materialize_views=True)
+        pipeline.run_daily_pipeline(spark, day, versioned, versioned=True)
+    for wh in (plain, versioned):
+        for name in pipeline.WAREHOUSE_TABLES:
+            _assert_warehouse_encoding(os.path.join(wh, name))
+    for view in marketing.WAREHOUSE_KPI_SQL:
+        chunks = list(_column_chunks(os.path.join(plain, f"kpi_{view}")))
+        assert chunks and {ch.compression for ch in chunks} == {"ZSTD"}, view
+
+    fresh = marketing.build_f_events(spark, SF)
+    delta = marketing.build_f_events(spark, day2)
+    part = str(tmp_path / "part")
+    for day in (fresh, delta):
+        fact = pipeline.merge_fact_partitioned(spark, part, day)
+        rollup = pipeline.update_daily_rollup(spark, part, fact, day)
+    _assert_warehouse_encoding(fact)
+    rollup_chunks = list(_column_chunks(rollup))
+    assert rollup_chunks and {ch.compression for ch in rollup_chunks} == {"ZSTD"}
+
+    store = str(tmp_path / "store")
+    vt.write_version(spark.range(0, 1000).withColumnRenamed("id", "doc_id"), store)
+    default_codec = spark.conf.get("spark.sql.parquet.compression.codec").upper()
+    for ch in _column_chunks(store):
+        assert ch.compression == default_codec
+        assert "DELTA_BINARY_PACKED" not in ch.encodings

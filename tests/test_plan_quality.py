@@ -411,3 +411,74 @@ def test_doc_term_family_single_tokenize_checkpoint(spark):
         # the explode chain lives inside the checkpoint; its presence
         # downstream would mean a second tokenize of the corpus
         assert "Generate explode" not in plan, name
+
+
+def test_hits_round_pins_auth_inside_hub_checkpoint(spark, monkeypatch):
+    """HITS runs ONE eager action per round: auth is pinned with a lazy
+    localCheckpoint, and hub's eager checkpoint is the first action to
+    read it, so auth's blocks fill inside hub's job. A spy on
+    ``localCheckpoint`` pins the order (lazy auth, then eager hub, each
+    round), that auth is still unmaterialized when hub's checkpoint
+    starts and fully cached when it ends; the SQL status store pins that
+    no other action runs in a round."""
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.operators import (
+        graph,
+    )
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40) for i in range(40)]
+        + [(i, (i * 3 + 1) % 40) for i in range(40)],
+        "src long, dst long",
+    )
+
+    def executions() -> list[tuple[int, str]]:
+        # (id, action) of the executions the store still retains; it
+        # keeps only the most recent ones, so compare by id, not index
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out, it = [], store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            out.append((int(e.executionId()), e.description().split(" at ")[0]))
+        return sorted(out)
+
+    def cached_parts(rdd_id: int) -> int:
+        for info in sc._jsc.sc().getRDDStorageInfo():
+            if int(info.id()) == rdd_id:
+                return int(info.numCachedPartitions())
+        return 0
+
+    calls: list[bool] = []
+    lazy_rdd: list[int] = []
+    auth_at_hub: list[tuple[int, int]] = []  # cached parts (before, after)
+    frame_cls = type(edges)  # the concrete (classic) DataFrame class
+    real = frame_cls.localCheckpoint
+
+    def spy(self, eager=True, storageLevel=None):
+        in_round = calls[-1:] == [False]
+        before = cached_parts(lazy_rdd[-1]) if in_round else None
+        out = real(self, eager=eager, storageLevel=storageLevel)
+        calls.append(eager)
+        if not eager:
+            lazy_rdd.append(int(out._jdf.logicalPlan().rdd().id()))
+        elif in_round:
+            auth_at_hub.append((before, cached_parts(lazy_rdd[-1])))
+        return out
+
+    iters = 3
+    last_exec = max((i for i, _ in executions()), default=-1)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    graph.hits(edges, iters=iters)
+    monkeypatch.undo()
+    # set-up pins edges, nodes and initial scores eagerly; then each
+    # round is (lazy auth, eager hub)
+    assert calls == [True] * 3 + [False, True] * iters
+    assert len(auth_at_hub) == iters
+    for before, after in auth_at_hub:
+        assert before == 0 and after > 0
+    # the only other action is the node count
+    ran = [action for i, action in executions() if i > last_exec]
+    assert ran == ["localCheckpoint"] * 2 + ["count"] + [
+        "localCheckpoint"
+    ] * (1 + 2 * iters)

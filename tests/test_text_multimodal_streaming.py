@@ -1276,6 +1276,19 @@ def test_video_table_distributed_matches_driver_rows(spark):
     assert got_mp4 == sorted(want_mp4, key=lambda r: r[0])
 
 
+def test_synthetic_video_tables_reject_empty_groups(spark):
+    # one spark.range partition per group: groups < 1 must fail with a
+    # clear error on the driver, not as a zero-partition range in Spark
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.functions import (
+        multimodal as mm,
+    )
+
+    for table in (mm.synthetic_mp4_sample_table, mm.synthetic_near_dup_video_table):
+        for groups in (0, -1):
+            with pytest.raises(ValueError, match="groups must be >= 1"):
+                table(spark, groups)
+
+
 def test_video_corrupt_payloads_skip_contract(spark):
     """Truncations/byte-flips of an MJPEG stream must surface as
     NotImplementedError only (the Arrow skip contract), and

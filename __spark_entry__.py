@@ -56,8 +56,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # show what a steady-state micro-batch costs — the number the 100 TB
 # claim rests on. Instrumented query builders reset their slot on
 # entry and record {"setup_sec": ..., "per_batch_sec": [...]}
-# (streaming gates append each foreachBatch commit's wall via the
-# ``batch_secs`` hook); bench.py copies the map into
+# (streaming gates fill it through the ``batch_secs`` hook with each
+# data trigger's ``addBatch`` seconds from Spark's progress reports);
+# bench.py copies the map into
 # BENCH_DETAIL_r{N}.json as "phases".
 PHASE_TIMINGS: dict[str, dict] = {}
 
@@ -3850,92 +3851,14 @@ def q_rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# Rotation of the driver's 50-entry CORRECTNESS window: the driver
-# grades the FIRST 50 names of queries(). Fully MECHANICAL since r12
-# (VERDICT r11 item 2 — no hand-transcription step left): the block
-# below is written by tools/gen_window.py from the fanout tool's
-# diff-affected set, hand-ATTRIBUTED oracle-SQL edits (--extra), and
-# grade_ledger canary fill; when a round's diff affects more than 50
-# queries (optimization rounds do), the most recently driver-graded
-# affected queries overflow into WINDOW_r{N}.json and are graded via
-# check_oracles on a vanilla session instead. Every query not in the
-# window stays verified by tools/check_oracles.py on a vanilla
-# session regardless.
-# --- BEGIN GENERATED WINDOW (tools/gen_window.py — do not hand-edit) ---
-# round 12, diff base db7cc23: 55 diff-affected (fanout_map --changed-since, plus registry entries newer
-# than FANOUT_MAP), 0 hand-attributed oracle-SQL edits, 0 mechanical
-# canaries (grade_ledger — stalest per dominant module). Audit artifact: WINDOW_r12.json;
-# tests/test_reference_shape.py re-derives affected ⊆ window ∪ overflow from the live git diff. 5 affected queries OVERFLOW the window (the most recently
-# driver-graded — see WINDOW_r12.json 'overflow'); they are graded via
-# check_oracles on a vanilla session and documented in the round notes.
-_FRONT_50 = [
-    "ann_store_forget",
-    "chunk_documents",
-    "dedup_near_docs",
-    "dedup_semantic_embeddings",
-    "dedup_store_forget",
-    "doc_bigram_surprisal",
-    "doc_bm25_topk",
-    "doc_bm25_topk_inverted",
-    "doc_bpe_tokens",
-    "doc_cjk_quality_gate",
-    "doc_curation_funnel",
-    "doc_hashed_features",
-    "doc_nb_quality_score",
-    "doc_quality_percentile",
-    "doc_unigram_surprisal",
-    "embedding_cosine_dups_lsh",
-    "embedding_kmeans_clusters",
-    "embedding_pca_project",
-    "embedding_topk_ivf",
-    "embedding_topk_ivf_pq_codes",
-    "embedding_topk_ivf_pq_indexed",
-    "embedding_topk_lsh",
-    "embedding_topk_pq",
-    "gopher_quality_flags",
-    "image_dedup_survivors",
-    "item_hits_scores",
-    "item_pagerank",
-    "media_avi_duration",
-    "media_mp4_frames",
-    "media_video_fingerprint",
-    "minhash_incremental_docs",
-    "multimodal_curation_funnel",
-    "rare_token_ratio",
-    "repetition_profile",
-    "semantic_incremental_embeddings",
-    "source_unigram_divergence",
-    "streaming_crawl_triage",
-    "streaming_doc_quality_gate",
-    "streaming_image_dedup",
-    "streaming_minhash_dedup",
-    "streaming_semantic_dedup",
-    "streaming_video_dedup",
-    "text_profile",
-    "tfidf_top_terms",
-    "versioned_delete_compact",
-    "video_dedup_survivors",
-    "video_fingerprint_dups",
-    "video_fingerprint_incremental",
-    "vocab_top_terms",
-    "weighted_sample_docs",
-]
-# --- END GENERATED WINDOW ---
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry of every implemented query/operator (SURVEY §2 + the
-    training-data extensions), reordered so the driver's 50-entry
-    CORRECTNESS window (_FRONT_50) re-grades every op whose
-    implementation OR oracle changed this round — the window block is
-    tool-GENERATED (tools/gen_window.py: fanout-affected set + canary
-    fill, with any >50 overflow recorded in WINDOW_r{N}.json and
-    graded via the vanilla check_oracles gate). The O(N^2)
-    exact similarity baselines (brute top-k, all-pairs cosine) are NOT
-    registered — they are pytest oracle gates (tests/
-    test_dedup_similarity.py); every registered similarity query is
-    subquadratic by plan (asserted in tests/test_plan_quality.py)."""
-    all_q = {
+    training-data extensions). The O(N^2) exact similarity baselines
+    (brute top-k, all-pairs cosine) are NOT registered — they are
+    pytest oracle gates (tests/test_dedup_similarity.py); every
+    registered similarity query is subquadratic by plan (asserted in
+    tests/test_plan_quality.py)."""
+    return {
         # --- 1-50: one representative per operator family ------------
         # star-schema builds (SURVEY §2.2 P1-P9; dim_user/dim_parameter/
         # dim_item are shape-siblings of dim_event → tail)
@@ -4254,10 +4177,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_image_dedup": q_streaming_image_dedup,
         "streaming_minhash_dedup": q_streaming_minhash_dedup,
     }
-    ordered = {name: all_q[name] for name in _FRONT_50}
-    ordered.update({n: fn for n, fn in all_q.items() if n not in ordered})
-    assert len(ordered) == len(all_q)
-    return ordered
 
 
 # ---------------------------------------------------------------------------

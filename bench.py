@@ -146,10 +146,11 @@ def main() -> None:
         "settled": settled,
         # Phase split for the lifecycle smokes (VERDICT r11 item 5):
         # setup_sec = index-train / store-seed / fixture staging;
-        # per_batch_sec = each foreachBatch (or gate-loop) commit's
-        # wall — the steady-state micro-batch cost the 100 TB claim
-        # rests on. Populated by the instrumented builders during the
-        # LAST sweep pass (timings above stay min-of-sweeps).
+        # per_batch_sec = each streaming trigger's addBatch time (or
+        # each gate-loop commit's wall) — the steady-state micro-batch
+        # cost the 100 TB claim rests on. Populated by the
+        # instrumented builders during the LAST sweep pass (timings
+        # above stay min-of-sweeps).
         "phases": entrymod.PHASE_TIMINGS,
         "queries": dict(sorted(timings.items())),
     }

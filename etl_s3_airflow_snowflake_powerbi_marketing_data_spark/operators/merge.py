@@ -277,6 +277,21 @@ def versioned_merge(
     return vt.write_version(merge_update(target, source, keys), table_path)
 
 
+def append_if_absent(
+    spark, table_path: str, source: DataFrame, keys: Sequence[str]
+) -> int:
+    """Insert-if-absent commit of ``source`` into a versioned table:
+    :func:`versioned_merge` with ``update=False`` once the table has a
+    version, else ``source`` itself as the first version. Replaying the
+    same rows commits no new keys, which is what makes a replayed
+    streaming batch effectively-once. Returns the committed version."""
+    from ..sources import versioned as vt  # noqa: PLC0415
+
+    if vt.table_versions(table_path):
+        return versioned_merge(spark, table_path, source, keys, update=False)
+    return vt.write_version(source, table_path)
+
+
 def scd2_point_in_time(
     dim: DataFrame,
     probes: DataFrame,

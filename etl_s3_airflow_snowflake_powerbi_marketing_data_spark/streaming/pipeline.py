@@ -13,13 +13,20 @@ the sink to a partitioned table — the plan in between is identical.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import tempfile
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager, nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.merge import append_if_absent
 from ..operators.transforms import PROPS_SCHEMA
+from ..session import inheritable
+from ..sources import versioned as vt
 
 
 @contextmanager
@@ -51,6 +58,25 @@ def bounded_state_partitions(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+def _drain(writer, spark: SparkSession, state_partitions: int | None = None):
+    """Start ``writer``, run it over everything its source holds now
+    (``Trigger.AvailableNow`` semantics) and stop it, inside
+    :func:`bounded_state_partitions` when ``state_partitions`` is given.
+    Returns the stopped query; its ``recentProgress`` stays readable."""
+    with (
+        nullcontext()
+        if state_partitions is None
+        else bounded_state_partitions(spark, state_partitions)
+    ):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return q
+
 
 # Logical schema of the event stream; the physical type of ``ts`` is
 # resolved per-source in read_event_stream (see below).
@@ -166,17 +192,13 @@ def run_stream_to_memory(
     result as a batch DataFrame from the memory sink."""
     stream = read_event_stream(spark, source_path)
     agg = streaming_event_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -218,17 +240,13 @@ def run_dedup_stream_to_memory(
     deduped = streaming_dedup(doubled).select(
         "event_id", "user_id", "event_type", "value"
     )
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        deduped.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -263,17 +281,13 @@ def run_sliding_to_memory(
 ) -> DataFrame:
     stream = read_event_stream(spark, source_path)
     agg = streaming_sliding_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -299,17 +313,13 @@ def run_hll_stream_to_memory(
 
     stream = read_event_stream(spark, source_path)
     regs = hll_registers(stream, "user_id", ["event_type"], p)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        regs.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return hll_finalize(spark.table(query_name), ["event_type"], p).orderBy(
         "event_type"
     )
@@ -339,17 +349,13 @@ def run_cms_stream_to_memory(
 
     stream = read_event_stream(spark, source_path)
     regs = cms_registers(stream, "user_id", depth=depth, width=width)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        regs.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     watch = (
@@ -377,26 +383,18 @@ def _run_register_stream_to_versioned(
     as of any ingest point). This is the production shape the
     memory-sink runners (right for oracles, not for pipelines) stand
     in for."""
-    import tempfile  # noqa: PLC0415
-
-    from ..sources import versioned as vt  # noqa: PLC0415
-
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="sketch_vckpt_")
 
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
         vt.write_version(batch, table_path)
 
-    with bounded_state_partitions(regs.sparkSession, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        regs.writeStream.outputMode("complete")
+        .foreachBatch(commit_batch)
+        .option("checkpointLocation", ckpt),
+        regs.sparkSession,
+        state_partitions,
+    )
 
 
 def run_hll_stream_to_versioned(
@@ -414,7 +412,6 @@ def run_hll_stream_to_versioned(
     version's registers are bit-identical to the memory-sink and batch
     paths over the same rows (pinned in tests)."""
     from ..operators.sketches import hll_finalize, hll_registers  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
 
     stream = read_event_stream(spark, source_path)
     regs = hll_registers(stream, "user_id", ["event_type"], p)
@@ -444,7 +441,6 @@ def run_cms_stream_to_versioned(
         cms_point_estimates,
         cms_registers,
     )
-    from ..sources import versioned as vt  # noqa: PLC0415
 
     stream = read_event_stream(spark, source_path)
     regs = cms_registers(stream, "user_id", depth=depth, width=width)
@@ -504,17 +500,13 @@ def run_enriched_stream_to_memory(
 ) -> DataFrame:
     stream = read_event_stream(spark, source_path)
     agg = streaming_enriched_brand_counts(stream, items)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -547,7 +539,6 @@ def run_streaming_warehouse_merge(
     Returns the final warehouse contents as a batch DataFrame.
     """
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from ..operators.merge import merge_ignore  # noqa: PLC0415
 
@@ -569,15 +560,11 @@ def run_streaming_warehouse_merge(
             shutil.rmtree(target_dir)
         os.rename(staging, target_dir)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+        .option("checkpointLocation", ckpt),
+        spark,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(target_dir)
 
 
@@ -657,17 +644,13 @@ def run_attribution_stream_to_memory(
             F.col("event_type") == "purchase"
         ),
     )
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        joined.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -688,39 +671,29 @@ def run_streaming_versioned_merge(
     the merge is idempotent on ``keys``, so a re-delivered batch
     commits a content-identical version. Returns the final snapshot.
     """
-    import tempfile  # noqa: PLC0415
-
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
-
     stream = read_event_stream(spark, source_path)
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_vmerge_ckpt_")
 
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if vt.table_versions(table_path):
-            versioned_merge(sess, table_path, batch, list(keys), update=False)
-        else:
-            vt.write_version(batch, table_path)
+        append_if_absent(batch.sparkSession, table_path, batch, list(keys))
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
+        .option("checkpointLocation", ckpt),
+        spark,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return vt.read_version(spark, table_path)
 
 
-def _parquet_file_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over a parquet prefix (one file per
-    micro-batch locally; at crawl scale, an object-store prefix each
-    fetch wave appends to). Schema probed from a driver-side batch
-    metadata read; directory-shaped targets stream the directory
-    itself (``_stream_source_parts``)."""
+def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a parquet prefix of documents, media
+    (binary payloads ride the columnar path unchanged) or embeddings:
+    one file per micro-batch locally; at crawl scale, an object-store
+    prefix each fetch wave appends to. Schema probed from a
+    driver-side batch metadata read; directory-shaped targets stream
+    the directory itself (``_stream_source_parts``). These schemas are
+    stable (no nanos-timestamp variance, unlike
+    :func:`read_event_stream`), so no column is normalized."""
     base_dir, file_name = _stream_source_parts(path)
     schema = (
         spark.read.option("pathGlobFilter", file_name or "*")
@@ -735,44 +708,137 @@ def _parquet_file_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Document stream (:func:`_parquet_file_stream`) — the document
-    schema is stable (no nanos-timestamp variance), so no column
-    normalization is needed."""
-    return _parquet_file_stream(spark, path)
+class _Store(NamedTuple):
+    """A versioned table a dedup gate appends its keepers to,
+    insert-if-absent on ``key``; ``derive`` maps the pinned keepers to
+    the rows the table holds."""
+
+    path: str
+    key: str
+    derive: Callable[[DataFrame], DataFrame] = lambda keepers: keepers
 
 
-def read_media_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Media stream (:func:`_parquet_file_stream`, MEDIA_SCHEMA —
-    binary payloads ride the columnar path unchanged)."""
-    return _parquet_file_stream(spark, path)
+def _snapshot_or_empty(
+    sess: SparkSession, path: str, schema: str
+) -> DataFrame:
+    """Latest snapshot of a versioned store, or an empty ``schema``
+    frame before its first commit."""
+    if vt.table_versions(path):
+        return vt.read_version(sess, path)
+    return sess.createDataFrame([], schema)
 
 
-def read_embedding_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Embedding stream (:func:`_parquet_file_stream` over
-    (vec_id, embedding array<float>, …) rows — the shape each crawl
-    wave's encoder emits)."""
-    return _parquet_file_stream(spark, path)
+def _run_gate_stream(
+    spark: SparkSession,
+    source_path: str,
+    decisions_path: str,
+    key: str,
+    gate: Callable[[SparkSession, DataFrame], tuple[DataFrame, DataFrame]],
+    early: Sequence[_Store],
+    late: Sequence[_Store],
+    state_partitions: int,
+    checkpoint_dir: str | None,
+    batch_secs: list | None,
+) -> DataFrame:
+    """Drive a streaming dedup gate over ``source_path``, one parquet
+    file per micro-batch. Per batch, ``gate(sess, batch)`` returns the
+    pinned decisions — (``key``, matched_store_id, matched_batch_id,
+    keep) — and the rows its stores derive from. The runner commits
+    the decisions to ``decisions_path`` and the keepers (those rows
+    joined to the kept keys, pinned once) to each store, every commit
+    insert-if-absent (:func:`append_if_absent`). Spark-side streaming
+    state is zero rows: the stores in the versioned table layer are the
+    only cross-batch state. Returns the final decisions snapshot; a
+    ``batch_secs`` list gets each data trigger's ``addBatch`` seconds
+    from Spark's own progress reports.
+
+    Commit order, the crash-safety rule of every gate: a trigger can
+    die between any two commits, and Spark then replays the whole
+    batch from the checkpoint. Insert-if-absent keeps whatever landed
+    and re-commits nothing, so the replay is safe exactly when it
+    decides every item as the first attempt did.
+
+    - ``early`` stores are never match candidates (semantic
+      ``{index}/vectors`` is read only by the exact re-rank, through a
+      code row), so one that lands without the decisions changes no
+      replayed decision. They commit concurrently with the decisions.
+    - ``late`` stores are match candidates. Landed before the
+      decisions, they would make the replay match the batch against
+      its own entries and flip keep to false. They commit strictly
+      after the decisions and every early store have landed, in the
+      listed order, so semantic codes stay a subset of vectors and no
+      code is ever unverifiable.
+    """
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_gate_ckpt_")
+
+    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+        sess = batch.sparkSession
+        decisions, rows = gate(sess, batch)
+
+        def keepers_then_early() -> DataFrame:
+            keepers = rows.join(
+                decisions.filter(F.col("keep")).select(key), key
+            ).localCheckpoint(eager=True)
+            for store in early:
+                append_if_absent(
+                    sess, store.path, store.derive(keepers), [store.key]
+                )
+            return keepers
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_dec = pool.submit(
+                inheritable(append_if_absent),
+                sess, decisions_path, decisions, [key],
+            )
+            f_keep = pool.submit(inheritable(keepers_then_early))
+            f_dec.result()
+            keepers = f_keep.result()
+        for store in late:
+            append_if_absent(
+                sess, store.path, store.derive(keepers), [store.key]
+            )
+
+    q = _drain(
+        read_parquet_stream(spark, source_path)
+        .writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", ckpt),
+        spark,
+        state_partitions,
+    )
+    if batch_secs is not None:
+        batch_secs.extend(
+            p.durationMs["addBatch"] / 1000
+            for p in q.recentProgress
+            if p.numInputRows
+        )
+    return vt.read_version(spark, decisions_path)
 
 
-def _timed_batches(fn, batch_secs):
-    """Optional per-trigger wall-clock hook for the streaming gates
-    (VERDICT r11 item 5): when the caller passes a ``batch_secs``
-    list, each foreachBatch commit's wall seconds are appended to it —
-    the steady-state per-micro-batch cost, separated from the
-    train/seed/fixture SETUP the lifecycle smokes otherwise fold into
-    one flat bench number. ``None`` (the default everywhere) is
-    zero-overhead passthrough."""
-    if batch_secs is None:
-        return fn
-    import time  # noqa: PLC0415
+def _hash_gate(
+    hash_table_fn, hash_col: str, store_path: str, max_hamming: int
+):
+    """Gate of the signature-dedup streams (image dHash, video temporal
+    fingerprint): hash the batch ONCE (pinned — the check and the
+    keepers join both read it) and check it against the persisted
+    signature store via operators/dedup.py:hamming_incremental."""
+    from ..operators import dedup as dedup_ops  # noqa: PLC0415
 
-    def wrapped(batch, batch_id):
-        t0 = time.time()
-        fn(batch, batch_id)
-        batch_secs.append(round(time.time() - t0, 2))
+    def id_sh(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
+        )
 
-    return wrapped
+    def gate(sess: SparkSession, batch: DataFrame):
+        hashed = hash_table_fn(batch).localCheckpoint(eager=True)
+        store = _snapshot_or_empty(
+            sess, store_path, f"media_id long, {hash_col} long"
+        )
+        decisions = dedup_ops.hamming_incremental(
+            id_sh(store), id_sh(hashed), max_hamming=max_hamming
+        ).localCheckpoint(eager=True)
+        return decisions, hashed
+
+    return gate
 
 
 def run_streaming_image_dedup(
@@ -805,10 +871,14 @@ def run_streaming_image_dedup(
     matched_store_id, matched_batch_id, keep), -1 sentinels."""
     from ..functions.multimodal import dhash_table  # noqa: PLC0415
 
-    return _run_streaming_hash_dedup(
-        spark, source_path, store_path, decisions_path,
-        dhash_table, "dhash", max_hamming, state_partitions,
-        checkpoint_dir, batch_secs,
+    return _run_gate_stream(
+        spark, source_path, decisions_path, "media_id",
+        gate=_hash_gate(dhash_table, "dhash", store_path, max_hamming),
+        early=[],
+        late=[_Store(store_path, "media_id")],
+        state_partitions=state_partitions,
+        checkpoint_dir=checkpoint_dir,
+        batch_secs=batch_secs,
     )
 
 
@@ -823,8 +893,8 @@ def run_streaming_video_dedup(
     batch_secs: list | None = None,
 ) -> DataFrame:
     """Streaming VIDEO content dedup gate — the fourth-modality
-    streaming leg, sharing :func:`_run_streaming_hash_dedup` with the
-    image gate: each arriving micro-batch of MJPEG-class streams is
+    streaming leg, sharing :func:`_hash_gate` with the image gate:
+    each arriving micro-batch of MJPEG-class streams is
     temporally fingerprinted (functions/multimodal.py:
     video_fingerprint_table — marker-walk frame split, per-frame
     dHash, majority fold; undecodable payloads skip) and checked
@@ -838,114 +908,15 @@ def run_streaming_video_dedup(
     def fp_table(df: DataFrame) -> DataFrame:
         return video_fingerprint_table(df).select("media_id", "vfp")
 
-    return _run_streaming_hash_dedup(
-        spark, source_path, store_path, decisions_path,
-        fp_table, "vfp", max_hamming, state_partitions, checkpoint_dir,
-        batch_secs,
+    return _run_gate_stream(
+        spark, source_path, decisions_path, "media_id",
+        gate=_hash_gate(fp_table, "vfp", store_path, max_hamming),
+        early=[],
+        late=[_Store(store_path, "media_id")],
+        state_partitions=state_partitions,
+        checkpoint_dir=checkpoint_dir,
+        batch_secs=batch_secs,
     )
-
-
-def _run_streaming_hash_dedup(
-    spark: SparkSession,
-    source_path: str,
-    store_path: str,
-    decisions_path: str,
-    hash_table_fn,
-    hash_col: str,
-    max_hamming: int,
-    state_partitions: int,
-    checkpoint_dir: str | None,
-    batch_secs: list | None = None,
-) -> DataFrame:
-    """Shared body of the streaming signature-dedup gates (image
-    dHash / video temporal fingerprint): hash each micro-batch ONCE,
-    gate it against the persisted signature store via
-    operators/dedup.py:hamming_incremental, commit decisions and
-    survivor signatures effectively-once (insert-if-absent versioned
-    merges)."""
-    import tempfile  # noqa: PLC0415
-
-    from ..operators import dedup as dedup_ops  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    stream = read_media_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_hashdedup_ckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        # hash the batch ONCE (eager — the dedup check and the
-        # survivor append both read it)
-        hashed = hash_table_fn(batch).localCheckpoint(eager=True)
-        if vt.table_versions(store_path):
-            store = vt.read_version(sess, store_path).select(
-                F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
-            )
-        else:
-            store = sess.createDataFrame([], "id long, sh long")
-        decisions = dedup_ops.hamming_incremental(
-            store,
-            hashed.select(
-                F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
-            ),
-            max_hamming=max_hamming,
-        ).localCheckpoint(eager=True)
-
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["media_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        # The decisions COMMIT and the survivor-join COMPUTE are
-        # independent (both read only the pinned `decisions` /
-        # `hashed` checkpoints) — overlap them (guide §2.6). The
-        # store COMMIT stays strictly AFTER the decisions commit:
-        # were the store appended first and the trigger crashed, the
-        # replayed batch would match its own store entries and flip
-        # keep decisions — the effectively-once contract rests on
-        # this order.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_surv = pool.submit(
-                inheritable(
-                    lambda: hashed.join(
-                        decisions.filter(F.col("keep")).select("media_id"),
-                        "media_id",
-                    )
-                    .select("media_id", hash_col)
-                    .localCheckpoint(eager=True)
-                )
-            )
-            f_dec.result()
-            survivors = f_surv.result()
-        if vt.table_versions(store_path):
-            versioned_merge(
-                sess, store_path, survivors, ["media_id"], update=False
-            )
-        else:
-            vt.write_version(survivors, store_path)
-
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
 
 
 def run_streaming_semantic_dedup(
@@ -979,14 +950,7 @@ def run_streaming_semantic_dedup(
     Spark-side streaming state is zero rows. Output: the final
     decisions snapshot — (vec_id, matched_store_id, matched_batch_id,
     keep), -1 sentinels."""
-    import tempfile  # noqa: PLC0415
-
     from ..operators import similarity  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    stream = read_embedding_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_semdedup_ckpt_")
 
     # ONE bounded index load for the WHOLE stream (r12; was per
     # micro-batch): the index is trained before the stream starts and
@@ -995,74 +959,31 @@ def run_streaming_semantic_dedup(
     # come out of every trigger's steady-state cost.
     cent, books = similarity.load_ivf_pq_index(spark, index_path)
 
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
+    def gate(sess: SparkSession, batch: DataFrame):
         corpus = vt.read_version(sess, f"{index_path}/vectors")
         decisions = similarity.semantic_dedup_incremental(
             sess, batch, index_path, corpus,
             threshold=threshold, n_probe=n_probe, index=(cent, books),
         ).localCheckpoint(eager=True)
+        return decisions, batch
 
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["vec_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        def _commit_vectors() -> DataFrame:
-            keep = batch.join(
-                decisions.filter(F.col("keep")).select("vec_id"), "vec_id"
-            ).localCheckpoint(eager=True)  # feeds codes encode + append
-            versioned_merge(
-                sess, f"{index_path}/vectors", keep, ["vec_id"],
-                update=False,
+    return _run_gate_stream(
+        spark, source_path, decisions_path, "vec_id",
+        gate=gate,
+        early=[_Store(f"{index_path}/vectors", "vec_id")],
+        late=[
+            _Store(
+                f"{index_path}/codes",
+                "neighbor_id",
+                lambda keepers: similarity.ivf_pq_codes_table(
+                    keepers, cent, books
+                ),
             )
-            return keep
-
-        # Decisions and vectors commit CONCURRENTLY (guide §2.6) —
-        # safe under a mid-crash in either order: an orphan vector
-        # (vectors landed, decisions didn't) has no code row, so it
-        # is never a shortlist candidate and the replayed batch's
-        # decisions are unchanged; decisions-without-vectors replays
-        # both merges idempotently. The CODES merge stays strictly
-        # LAST: codes ⊆ vectors through a crash (ADVICE r11 — the
-        # exact re-rank id-joins shortlist candidates to the vectors
-        # table, so an unverifiable code must never exist), and
-        # codes-before-decisions would make a replayed batch match
-        # its own codes and flip keep decisions.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_vec = pool.submit(inheritable(_commit_vectors))
-            f_dec.result()
-            keepers = f_vec.result()
-        versioned_merge(
-            sess,
-            f"{index_path}/codes",
-            similarity.ivf_pq_codes_table(keepers, cent, books),
-            ["neighbor_id"],
-            update=False,
-        )
-
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
+        ],
+        state_partitions=state_partitions,
+        checkpoint_dir=checkpoint_dir,
+        batch_secs=batch_secs,
+    )
 
 
 def streaming_doc_quality_counts(
@@ -1177,7 +1098,7 @@ def run_crawl_triage_stream_to_memory(
     NFC/script signals (the Gopher gate keeps reading the raw text;
     see streaming_crawl_triage_counts on why) — so the triage signals
     vary on the ASCII testdata."""
-    stream = read_document_stream(spark, source_path)
+    stream = read_parquet_stream(spark, source_path)
     signal_col = "text"
     if inject:
         t = F.col("text")
@@ -1201,17 +1122,13 @@ def run_crawl_triage_stream_to_memory(
         signal_col = "sig_text"
         stream = stream.withColumn(signal_col, t)
     agg = streaming_crawl_triage_counts(stream, signal_col=signal_col)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -1223,19 +1140,15 @@ def run_doc_quality_stream_to_memory(
 ) -> DataFrame:
     """Drive the document quality gate to completion over the current
     contents of ``source_path`` and return the memory-sink table."""
-    stream = read_document_stream(spark, source_path)
+    stream = read_parquet_stream(spark, source_path)
     agg = streaming_doc_quality_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -1278,86 +1191,33 @@ def run_streaming_minhash_dedup(
     snapshot — (doc_id, matched_store_id, matched_batch_id, keep),
     -1 sentinels for no-match.
     """
-    import tempfile  # noqa: PLC0415
-
     from ..operators import dedup as dedup_ops  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
 
-    stream = read_document_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_mhdedup_ckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
+    def gate(sess: SparkSession, batch: DataFrame):
         docs = batch.select("doc_id", "text")
         # Sign the batch ONCE (eager — both the dedup check and the
-        # survivor append read it) instead of paying two 64-aggregate
+        # keepers join read it) instead of paying two 64-aggregate
         # signing passes per micro-batch.
-        sigs = dedup_ops.minhash_signatures(docs).localCheckpoint(
-            eager=True
+        sigs = (
+            dedup_ops.minhash_signatures(docs)
+            .withColumnRenamed("id", "doc_id")
+            .localCheckpoint(eager=True)
         )
-        if vt.table_versions(store_path):
-            store = vt.read_version(sess, store_path).select(
-                "doc_id", "signature"
-            )
-        else:
-            store = sess.createDataFrame(
-                [], "doc_id long, signature array<bigint>"
-            )
+        store = _snapshot_or_empty(
+            sess, store_path, "doc_id long, signature array<bigint>"
+        )
         decisions = dedup_ops.minhash_incremental(
-            store, docs, threshold=threshold, incoming_sigs=sigs
+            store.select("doc_id", "signature"), docs,
+            threshold=threshold, incoming_sigs=sigs,
         ).localCheckpoint(eager=True)
+        return decisions, sigs
 
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["doc_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        # Overlap the decisions COMMIT with the survivor-join COMPUTE
-        # (guide §2.6 — both read only the pinned `decisions`/`sigs`
-        # checkpoints). The store COMMIT stays strictly AFTER the
-        # decisions commit: store-before-decisions under a mid-crash
-        # would make the replayed batch match its own signatures and
-        # flip keep decisions (the effectively-once contract).
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_surv = pool.submit(
-                inheritable(
-                    lambda: sigs.join(
-                        decisions.filter(F.col("keep")).select("doc_id"),
-                        F.col("id") == F.col("doc_id"),
-                    )
-                    .select("doc_id", "signature")
-                    .localCheckpoint(eager=True)
-                )
-            )
-            f_dec.result()
-            survivors = f_surv.result()
-        if vt.table_versions(store_path):
-            versioned_merge(
-                sess, store_path, survivors, ["doc_id"], update=False
-            )
-        else:
-            vt.write_version(survivors, store_path)
-
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
+    return _run_gate_stream(
+        spark, source_path, decisions_path, "doc_id",
+        gate=gate,
+        early=[],
+        late=[_Store(store_path, "doc_id")],
+        state_partitions=state_partitions,
+        checkpoint_dir=checkpoint_dir,
+        batch_secs=batch_secs,
+    )

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pipeline import read_event_stream
+from .pipeline import _drain, read_event_stream
 
 SESSION_GAP_SECONDS = 1800
 
@@ -155,19 +155,12 @@ def run_streaming_sessions(
     ``source_path`` and return the collapsed session table (state
     partition count pinned for the smoke-scale state — see
     pipeline.bounded_state_partitions)."""
-    from .pipeline import bounded_state_partitions  # noqa: PLC0415
-
-    stream = read_event_stream(spark, source_path)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            streaming_sessions(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        streaming_sessions(read_event_stream(spark, source_path))
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name),
+        spark,
+        state_partitions,
+    )
     return latest_sessions(spark.table(query_name))

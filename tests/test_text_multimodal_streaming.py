@@ -1425,9 +1425,13 @@ def test_streaming_video_gate_replay_is_effectively_once(spark, tmp_path):
         ).select("media_id", "vfp"),
         store,
     )
+    batch_secs: list = []
     first = pipeline.run_streaming_video_dedup(
-        spark, str(src), store, dec, checkpoint_dir=str(tmp_path / "c1")
+        spark, str(src), store, dec, checkpoint_dir=str(tmp_path / "c1"),
+        batch_secs=batch_secs,
     ).orderBy("media_id").collect()
+    # one addBatch duration per data trigger (two source files)
+    assert len(batch_secs) == 2 and all(s > 0 for s in batch_secs)
     store_v1 = sorted(
         (r["media_id"], r["vfp"])
         for r in vt.read_version(spark, store).collect()

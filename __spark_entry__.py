@@ -12,6 +12,7 @@ precomputed by an independent pure-Python implementation
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,7 +48,7 @@ from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.session import (
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (KPI view 1) on /root/testdata/sf0.001."""
-    return marketing.view_count_by_period(spark, "/root/testdata/sf0.001")
+    return marketing.kpi_view("view_count_by_period", spark, "/root/testdata/sf0.001")
 
 
 # Phase-split timings for the lifecycle smokes (VERDICT r11 item 5):
@@ -3867,12 +3868,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fact_events": marketing.build_f_events,
         # KPI views (SURVEY §2.3 Q1-Q13 + the README.md:14-16 Power-BI
         # layer questions)
-        "kpi_view_count_by_period": marketing.view_count_by_period,
-        "kpi_item_view_rank_by_period": marketing.item_view_rank_by_period,
-        "kpi_most_viewed_item_latest_period": marketing.most_viewed_item_latest_period,
-        "kpi_top_event_type_by_period": marketing.top_event_type_by_period,
-        "kpi_view_trend_by_period": marketing.view_trend_by_period,
-        "kpi_top_items_view_share": marketing.top_items_view_share,
+        **{
+            f"kpi_{view}": partial(marketing.kpi_view, view)
+            for view in marketing.KPI_SQL
+        },
         # merge layer (S6/S7)
         "merge_ignore_orders": q_merge_ignore,
         "merge_update_orders": q_merge_update,

@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .keys import ordered_surrogate_key
 from .transforms import dedup_keep_first
 
 
@@ -92,6 +93,57 @@ def merge_update(
     return kept_old.select(*target.columns).unionByName(
         src.select(*target.columns)
     )
+
+
+def merge_keep_guid(
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    guid_col: str,
+    guid_order: Sequence[str],
+    start: int,
+    update: bool,
+) -> DataFrame:
+    """MERGE that keeps a surrogate key globally unique across loads.
+
+    Source rows with a new key are numbered contiguously from ``start``
+    (ordered by ``guid_order`` for determinism). With ``update``, matched
+    source rows take fresh attributes but keep the target's guid (SCD-1);
+    without it, matched rows keep the target row. ``start`` is the
+    caller's because the target may be a slice of the table (e.g. the
+    partitions a delta touches) while numbering must follow the whole
+    table's max. The source's own ``guid_col``, if any, is dropped.
+
+    Plan shape, in this union order: ``target LEFT ANTI JOIN source``
+    (kept old rows), matched rows with the target's guid, new rows (with
+    ``update``; else ``target`` then new rows), all joins on the
+    null-safe key condition.
+    """
+    src = source.drop(guid_col)
+    cond = _key_cond(keys)
+    new_rows = ordered_surrogate_key(
+        src.alias("s").join(target.alias("t"), cond, "left_anti"),
+        guid_col,
+        order_by=list(guid_order),
+        start=start,
+    ).select(*target.columns)
+    if not update:
+        return target.unionByName(new_rows)
+    matched = (
+        src.alias("s")
+        .join(target.select(*keys, guid_col).alias("t"), cond, "inner")
+        .select(
+            *[F.col(f"s.{c}") for c in src.columns],
+            F.col(f"t.{guid_col}").alias(guid_col),
+        )
+        .select(*target.columns)
+    )
+    kept_old = (
+        target.alias("t")
+        .join(src.alias("s"), cond, "left_anti")
+        .select(*target.columns)
+    )
+    return kept_old.unionByName(matched).unionByName(new_rows)
 
 
 def merge_write(

@@ -8,13 +8,19 @@ spans one month, so the reference's ``YEAR(event_time)`` becomes
 ``to_date(ts)`` — same date-part-extraction + groupBy operator class
 (Q4), non-degenerate grouping.
 
-Star-schema builds mirror SURVEY.md §2.2 (P1-P9) and the four KPI views
-mirror `etl_s3_snowflake_aggregated_views.py` (Q1-Q13):
+Star-schema builds mirror SURVEY.md §2.2 (P1-P9). Each KPI view has one
+definition, its SQL body in ``KPI_SQL``; the warehouse registers it over
+its persisted tables (``WAREHOUSE_KPI_SQL``) and ``kpi_view`` runs it
+over the synthetic tables. The first four mirror
+`etl_s3_snowflake_aggregated_views.py` (Q1-Q13), the last two the
+reference's Power BI questions (`README.md:14-16`):
 
 1. ``view_count_by_period``      ↔ yearly_item_view_count        (:22-35)
 2. ``item_view_rank_by_period``  ↔ item_view_based_on_particular_year (:37-52)
 3. ``most_viewed_item_latest_period`` ↔ most_viewed_item_based_on_most_recent_year (:55-72)
 4. ``top_event_type_by_period``  ↔ most_used_platform_in_particular_year (:75-92)
+5. ``view_trend_by_period``      ↔ year-over-year view trend
+6. ``top_items_view_share``      ↔ top-10 items and their view share
 
 Scale notes: the fact→dim join broadcasts the dim (2K rows); the
 period aggregations are map-side-combinable counts; the dense_rank
@@ -26,7 +32,7 @@ offsets, never an all-rows-on-one-task window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.keys import ordered_surrogate_key
@@ -36,9 +42,6 @@ from ..operators.transforms import (
     parse_json_column,
 )
 from ..tables import load_table
-
-VIEW_EVENT = "view"  # plays the reference's WHERE event_name = 'view_item'
-
 
 # ---------------------------------------------------------------------------
 # Star-schema builds (dims + fact)
@@ -150,240 +153,39 @@ def build_f_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# KPI views (the golden queries)
+# KPI views (the golden queries): one SQL definition, two bindings
 # ---------------------------------------------------------------------------
 
-def _filtered_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared CTE: FILTERED_EVENTS AS (SELECT * FROM f_events WHERE
-    event_name = 'view_item') ↔ `etl_s3_snowflake_aggregated_views.py:27-28`.
-
-    Built from the flat parse, not ``build_f_events``: none of the KPI
-    views read ``guid_event``, so recomputing the numbering (its count
-    branch + bucket join) would be dead weight Catalyst cannot fully
-    prune. Against a materialized f_events table this is just a scan.
-    """
-    fact = _fact_columns(_flat_events(spark, sf_dir))
-    return fact.filter(F.col("event_name") == VIEW_EVENT)
-
-
-def view_count_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 1 ↔ yearly_item_view_count (:22-35): filter → join dim →
-    date-part → count → order desc. The dim join broadcasts."""
-    fact = _filtered_fact(spark, sf_dir)
-    dim = build_d_item(spark, sf_dir)
-    return (
-        fact.join(
-            F.broadcast(dim),
-            fact.event_parameter_value == dim.item_id,
-            "inner",
-        )
-        .groupBy(F.date_trunc("day", "event_time").alias("period"))
-        .agg(F.count("event_time").alias("item_view"))
-        .orderBy(F.col("period").desc())
-    )
-
-
-def item_view_rank_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 2 ↔ item_view_based_on_particular_year (:37-52):
-    two-key groupBy + dense_rank over the aggregate within period."""
-    fact = _filtered_fact(spark, sf_dir)
-    dim = build_d_item(spark, sf_dir)
-    counts = (
-        fact.join(F.broadcast(dim), fact.event_parameter_value == dim.item_id, "inner")
-        .groupBy(F.date_trunc("day", "event_time").alias("period"), F.col("item_name"))
-        .agg(F.count("event_time").alias("item_view"))
-    )
-    w = Window.partitionBy("period").orderBy(F.col("item_view").desc())
-    return counts.withColumn(
-        "item_view_rank", F.dense_rank().over(w).cast("long")
-    ).orderBy("period", "item_view_rank", "item_name")
-
-
-def most_viewed_item_latest_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 3 ↔ most_viewed_item_based_on_most_recent_year (:55-72):
-    scalar-subquery max period + top-1 (TakeOrderedAndProject).
-
-    Deviation from the reference, documented: ties on the top view count
-    are broken by item_name so the result is deterministic (the
-    reference's bare ``ORDER BY ITEM_VIEW DESC LIMIT 1`` is not).
-    """
-    fact = _filtered_fact(spark, sf_dir)
-    dim = build_d_item(spark, sf_dir)
-    joined = fact.join(
-        F.broadcast(dim), fact.event_parameter_value == dim.item_id, "inner"
-    ).withColumn("period", F.date_trunc("day", "event_time"))
-    max_period = joined.agg(F.max("period").alias("mx"))
-    return (
-        joined.join(F.broadcast(max_period), F.col("period") == F.col("mx"))
-        .groupBy("period", "item_name")
-        .agg(F.count("event_time").alias("item_view"))
-        .orderBy(F.col("item_view").desc(), F.col("item_name"))
-        .limit(1)
-    )
-
-
-def top_event_type_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 4 ↔ most_used_platform_in_particular_year (:75-92):
-    nested CTE → two-key count → dense_rank → keep rank 1.
-
-    ``event_type`` plays the platform column (the synthetic schema folds
-    event_name and platform into one field); no event filter so the
-    ranking is non-degenerate across all five types.
-    """
-    events = load_table(spark, sf_dir, "events")
-    counts = (
-        events.groupBy(
-            F.date_trunc("day", "ts").alias("period"), F.col("event_type")
-        ).agg(F.count("ts").alias("type_count"))
-    )
-    w = Window.partitionBy("period").orderBy(
-        F.col("type_count").desc(), F.col("event_type")
-    )
-    return (
-        counts.withColumn("type_rank", F.dense_rank().over(w).cast("long"))
-        .filter(F.col("type_rank") == 1)
-        .orderBy("period", "event_type")
-    )
-
-
-def view_trend_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 5 ↔ the reference's year-over-year-trend business
-    question (`README.md:14`), answered there inside Power BI rather
-    than a SQL view: period-over-period view counts with LAG delta and
-    percent change.
-
-    The LAG window is unpartitioned by necessity (the trend is a global
-    ordering over periods) but runs AFTER the aggregation, over one row
-    per period — bounded cardinality (#days, #years), never over raw
-    events, so the single-partition window stage is O(periods) at any
-    input scale.
-    """
-    fact = _filtered_fact(spark, sf_dir)
-    dim = build_d_item(spark, sf_dir)
-    counts = (
-        fact.join(
-            F.broadcast(dim), fact.event_parameter_value == dim.item_id, "inner"
-        )
-        .groupBy(F.date_trunc("day", "event_time").alias("period"))
-        .agg(F.count("event_time").alias("item_view"))
-    )
-    w = Window.orderBy("period")
-    prev = F.lag("item_view").over(w)
-    return (
-        counts.select(
-            "period",
-            "item_view",
-            prev.alias("prev_view"),
-            (F.col("item_view") - prev).alias("view_delta"),
-            # floor-truncate instead of round: identical IEEE result in any
-            # engine (round ties split HALF_UP vs HALF_EVEN across engines)
-            (F.floor((F.col("item_view") - prev) * 100.0 / prev * 1e6) / 1e6).alias(
-                "pct_change"
-            ),
-        )
-        # the first period has no prior to compare against; dropping it
-        # keeps the result NULL-free (NaN breaks order-insensitive hashing)
-        .filter(F.col("prev_view").isNotNull())
-        .orderBy("period")
-    )
-
-
-def top_items_view_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPI view 6 ↔ the reference's top-10-item-detail and
-    view-share-distribution business questions (`README.md:15-16`),
-    answered there inside Power BI: the ten most-viewed items in the
-    latest period with each item's share of that period's total views.
-
-    Ranking uses row_number with an item_name tiebreak so exactly ten
-    deterministic rows come back (the reference's Power BI top-N has the
-    same arbitrary-tie caveat). The share denominator is an unpartitioned
-    window sum — over per-item aggregates (bounded by #items), not raw
-    events, so it stays O(items) at any input scale.
-    """
-    fact = _filtered_fact(spark, sf_dir)
-    dim = build_d_item(spark, sf_dir)
-    joined = fact.join(
-        F.broadcast(dim), fact.event_parameter_value == dim.item_id, "inner"
-    ).withColumn("period", F.date_trunc("day", "event_time"))
-    max_period = joined.agg(F.max("period").alias("mx"))
-    counts = (
-        joined.join(F.broadcast(max_period), F.col("period") == F.col("mx"))
-        .groupBy("period", "item_name")
-        .agg(F.count("event_time").alias("item_view"))
-    )
-    total = F.sum("item_view").over(Window.partitionBy("period"))
-    ranked = counts.select(
-        "period",
-        "item_name",
-        "item_view",
-        (F.floor(F.col("item_view") * 100.0 / total * 1e6) / 1e6).alias(
-            "view_share_pct"
-        ),
-        F.row_number()
-        .over(
-            Window.partitionBy("period").orderBy(
-                F.col("item_view").desc(), F.col("item_name")
-            )
-        )
-        .cast("long")
-        .alias("view_rank"),
-    )
-    return ranked.filter(F.col("view_rank") <= 10).orderBy("view_rank")
-
-
-# ---------------------------------------------------------------------------
-# View registration (S5/Q13: the catalog-facing contract)
-# ---------------------------------------------------------------------------
-
-KPI_BUILDERS = {
-    "view_count_by_period": view_count_by_period,
-    "item_view_rank_by_period": item_view_rank_by_period,
-    "most_viewed_item_latest_period": most_viewed_item_latest_period,
-    "top_event_type_by_period": top_event_type_by_period,
-}
-
-
-def register_kpi_views(spark: SparkSession, sf_dir: str) -> None:
-    """CREATE OR REPLACE (temp) VIEW for each KPI query ↔ Q13
-    (`etl_s3_snowflake_aggregated_views.py:26,41,59,79`). Views stay
-    virtual (recomputed on read) exactly like the reference's."""
-    for name, builder in KPI_BUILDERS.items():
-        builder(spark, sf_dir).createOrReplaceTempView(name)
-
-
-# ---------------------------------------------------------------------------
-# Warehouse-facing SQL view layer (pipeline mode)
-# ---------------------------------------------------------------------------
-
-# The same four KPI views as SQL text over the *persisted* warehouse
-# tables (f_events / d_item registered in the catalog), mirroring the
-# reference's CREATE OR REPLACE VIEW statements one-to-one
+# The SELECT body of each KPI view over ``{f_events}`` and ``{d_item}``,
+# mirroring the reference's CREATE OR REPLACE VIEW statements one-to-one
 # (`etl_s3_snowflake_aggregated_views.py:22-92`): CTE pre-filter, inner
 # dim join, date-part groupBy, window-over-aggregate DENSE_RANK, scalar
 # subquery for the latest period, top-1 LIMIT, and rank=1 filter.
-WAREHOUSE_KPI_SQL: dict[str, str] = {
+# ``event_name = 'view'`` plays the reference's ``'view_item'``. The
+# warehouse binds the placeholders to its persisted tables
+# (``WAREHOUSE_KPI_SQL``); ``kpi_view`` binds them to DataFrames built
+# from the synthetic tables. The fact⋈dim join broadcasts the dim.
+KPI_SQL: dict[str, str] = {
     "view_count_by_period": """
-        CREATE OR REPLACE TEMPORARY VIEW view_count_by_period AS
         WITH filtered_events AS (
-          SELECT * FROM f_events WHERE event_name = 'view'
+          SELECT * FROM {f_events} WHERE event_name = 'view'
         )
         SELECT date_trunc('day', f.event_time) AS period,
                COUNT(f.event_time) AS item_view
         FROM filtered_events f
-        INNER JOIN d_item d ON f.event_parameter_value = d.item_id
+        INNER JOIN {d_item} d ON f.event_parameter_value = d.item_id
         GROUP BY date_trunc('day', f.event_time)
         ORDER BY period DESC
     """,
     "item_view_rank_by_period": """
-        CREATE OR REPLACE TEMPORARY VIEW item_view_rank_by_period AS
         WITH filtered_events AS (
-          SELECT * FROM f_events WHERE event_name = 'view'
+          SELECT * FROM {f_events} WHERE event_name = 'view'
         ),
         counts AS (
           SELECT date_trunc('day', f.event_time) AS period,
                  d.item_name, COUNT(f.event_time) AS item_view
           FROM filtered_events f
-          INNER JOIN d_item d ON f.event_parameter_value = d.item_id
+          INNER JOIN {d_item} d ON f.event_parameter_value = d.item_id
           GROUP BY 1, 2
         )
         SELECT period, item_name, item_view,
@@ -392,16 +194,18 @@ WAREHOUSE_KPI_SQL: dict[str, str] = {
         FROM counts
         ORDER BY period, item_view_rank, item_name
     """,
+    # Deviation from the reference, documented: ties on the top view
+    # count are broken by item_name so the result is deterministic (the
+    # reference's bare ``ORDER BY ITEM_VIEW DESC LIMIT 1`` is not).
     "most_viewed_item_latest_period": """
-        CREATE OR REPLACE TEMPORARY VIEW most_viewed_item_latest_period AS
         WITH filtered_events AS (
-          SELECT * FROM f_events WHERE event_name = 'view'
+          SELECT * FROM {f_events} WHERE event_name = 'view'
         ),
         joined AS (
           SELECT date_trunc('day', f.event_time) AS period,
                  d.item_name, f.event_time
           FROM filtered_events f
-          INNER JOIN d_item d ON f.event_parameter_value = d.item_id
+          INNER JOIN {d_item} d ON f.event_parameter_value = d.item_id
         )
         SELECT period, item_name, COUNT(event_time) AS item_view
         FROM joined
@@ -410,12 +214,14 @@ WAREHOUSE_KPI_SQL: dict[str, str] = {
         ORDER BY item_view DESC, item_name
         LIMIT 1
     """,
+    # ``event_name`` plays the platform column (the synthetic schema
+    # folds event_name and platform into one field); no event filter, so
+    # the ranking is non-degenerate across all five types.
     "top_event_type_by_period": """
-        CREATE OR REPLACE TEMPORARY VIEW top_event_type_by_period AS
         WITH counts AS (
           SELECT date_trunc('day', event_time) AS period, event_name,
                  COUNT(event_time) AS type_count
-          FROM f_events GROUP BY 1, 2
+          FROM {f_events} GROUP BY 1, 2
         ),
         ranked AS (
           SELECT *, CAST(DENSE_RANK() OVER (PARTITION BY period
@@ -428,18 +234,20 @@ WAREHOUSE_KPI_SQL: dict[str, str] = {
         ORDER BY period, event_type
     """,
     # The two Power-BI-layer business questions (README.md:14-16) the
-    # reference answers inside the BI tool rather than a warehouse
-    # view — SQL twins of view_trend_by_period / top_items_view_share.
+    # reference answers inside the BI tool rather than a warehouse view.
+    # Period-over-period trend: the LAG window is unpartitioned but runs
+    # over one row per period, never over raw events; the first period
+    # has no prior and is dropped (NULL-free result). floor-truncation,
+    # not round: identical IEEE result in any engine.
     "view_trend_by_period": """
-        CREATE OR REPLACE TEMPORARY VIEW view_trend_by_period AS
         WITH filtered_events AS (
-          SELECT * FROM f_events WHERE event_name = 'view'
+          SELECT * FROM {f_events} WHERE event_name = 'view'
         ),
         counts AS (
           SELECT date_trunc('day', f.event_time) AS period,
                  COUNT(f.event_time) AS item_view
           FROM filtered_events f
-          INNER JOIN d_item d ON f.event_parameter_value = d.item_id
+          INNER JOIN {d_item} d ON f.event_parameter_value = d.item_id
           GROUP BY 1
         ),
         t AS (
@@ -453,16 +261,19 @@ WAREHOUSE_KPI_SQL: dict[str, str] = {
                  / 1e6 AS pct_change
         FROM t WHERE prev_view IS NOT NULL ORDER BY period
     """,
+    # Top ten items of the latest period with each one's share of that
+    # period's views: row_number with an item_name tiebreak returns ten
+    # deterministic rows; the share's window sum runs over per-item
+    # aggregates (bounded by #items), not raw events.
     "top_items_view_share": """
-        CREATE OR REPLACE TEMPORARY VIEW top_items_view_share AS
         WITH filtered_events AS (
-          SELECT * FROM f_events WHERE event_name = 'view'
+          SELECT * FROM {f_events} WHERE event_name = 'view'
         ),
         joined AS (
           SELECT date_trunc('day', f.event_time) AS period,
                  d.item_name, f.event_time
           FROM filtered_events f
-          INNER JOIN d_item d ON f.event_parameter_value = d.item_id
+          INNER JOIN {d_item} d ON f.event_parameter_value = d.item_id
         ),
         counts AS (
           SELECT period, item_name, COUNT(event_time) AS item_view
@@ -481,6 +292,40 @@ WAREHOUSE_KPI_SQL: dict[str, str] = {
         )
         SELECT * FROM ranked WHERE view_rank <= 10 ORDER BY view_rank
     """,
+}
+
+
+def kpi_view(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KPI view ``name`` over the synthetic tables: its ``KPI_SQL`` body
+    bound to the fact projection and the item dim of ``sf_dir``.
+
+    The fact is built from the flat parse, not ``build_f_events``: no KPI
+    view reads ``guid_event``, so recomputing the numbering (its count
+    branch + bucket join) would be dead weight Catalyst cannot fully
+    prune. The DataFrames bind through ``spark.sql`` keyword arguments,
+    so the call registers no ``f_events``/``d_item`` view of its own and
+    cannot clash with the warehouse's in a shared session. The dim is
+    built only for views that join it: loading a table costs a Spark
+    job (its parquet footer read).
+    """
+    sql = KPI_SQL[name]
+    tables = {"f_events": _fact_columns(_flat_events(spark, sf_dir))}
+    if "{d_item}" in sql:
+        tables["d_item"] = build_d_item(spark, sf_dir)
+    return spark.sql(sql, **tables)
+
+
+# ---------------------------------------------------------------------------
+# Warehouse-facing SQL view layer (pipeline mode)
+# ---------------------------------------------------------------------------
+
+# The same views as DDL over the *persisted* warehouse tables (f_events /
+# d_item registered in the catalog). Views stay virtual (recomputed on
+# read) exactly like the reference's.
+WAREHOUSE_KPI_SQL: dict[str, str] = {
+    name: f"\n        CREATE OR REPLACE TEMPORARY VIEW {name} AS"
+    + body.format(f_events="f_events", d_item="d_item")
+    for name, body in KPI_SQL.items()
 }
 
 

@@ -39,8 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.keys import ordered_surrogate_key
-from ..operators.merge import merge_ignore, merge_update
+from ..operators.merge import merge_ignore, merge_keep_guid, merge_update
 from . import marketing
 
 FACT_KEYS = ("event_id", "event_name", "event_parameter_value")
@@ -127,14 +126,6 @@ def _write_tbl(result: DataFrame, path: str) -> None:
     _swap_write(result, path)
 
 
-def _null_safe_cond(keys: tuple[str, ...]):
-    cond = None
-    for k in keys:
-        c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        cond = c if cond is None else cond & c
-    return cond
-
-
 def _merge_into(
     spark: SparkSession,
     result_path: str,
@@ -147,54 +138,22 @@ def _merge_into(
     """Bootstrap on first run; MERGE (ignore/update) afterwards.
 
     When ``guid_col`` is given, surrogate keys stay globally unique
-    across daily loads: matched rows keep the target's guid, new rows
-    are renumbered contiguously after the warehouse max (ordered by
-    ``guid_order`` for determinism). Without this, each day's delta
-    would re-number from 1 and collide with existing guids."""
+    across daily loads (``merge_keep_guid``): new rows are numbered
+    after the warehouse max, ordered by ``guid_order``. Without this,
+    each day's delta would re-number from 1 and collide with existing
+    guids."""
     if not _table_exists(result_path):
         _write_tbl(fresh, result_path)
         return
     target = _read_tbl(spark, result_path)
     if guid_col is None:
-        merged = (
-            merge_update(target, fresh, list(keys))
-            if update
-            else merge_ignore(target, fresh, list(keys))
-        )
-        _write_tbl(merged, result_path)
-        return
-
-    tgt_max = target.agg(F.max(guid_col)).first()[0] or 0
-    src = fresh.drop(guid_col)
-    cond = _null_safe_cond(keys)
-    new_src = src.alias("s").join(target.alias("t"), cond, "left_anti")
-    new_numbered = ordered_surrogate_key(
-        new_src, guid_col, order_by=list(guid_order), start=tgt_max + 1
-    ).select(*target.columns)
-    if update:
-        # Matched source rows take fresh attributes but keep the
-        # target's stable guid.
-        matched = (
-            src.alias("s")
-            .join(
-                target.select(*keys, guid_col).alias("t"),
-                cond,
-                "inner",
-            )
-            .select(
-                *[F.col(f"s.{c}") for c in src.columns],
-                F.col(f"t.{guid_col}").alias(guid_col),
-            )
-            .select(*target.columns)
-        )
-        kept_old = (
-            target.alias("t")
-            .join(src.alias("s"), cond, "left_anti")
-            .select(*target.columns)
-        )
-        merged = kept_old.unionByName(matched).unionByName(new_numbered)
+        merge = merge_update if update else merge_ignore
+        merged = merge(target, fresh, list(keys))
     else:
-        merged = target.unionByName(new_numbered)
+        tgt_max = target.agg(F.max(guid_col)).first()[0] or 0
+        merged = merge_keep_guid(
+            target, fresh, keys, guid_col, guid_order, tgt_max + 1, update
+        )
     _write_tbl(merged, result_path)
 
 
@@ -565,28 +524,9 @@ def merge_fact_partitioned(
     guid_max = (
         spark.read.parquet(path).agg(F.max("guid_event")).first()[0] or 0
     )
-    cond = _null_safe_cond(FACT_KEYS)
-    src = delta.drop("guid_event")
-    matched = (
-        src.alias("s")
-        .join(target.select(*FACT_KEYS, "guid_event").alias("t"), cond, "inner")
-        .select(
-            *[F.col(f"s.{c}") for c in src.columns],
-            F.col("t.guid_event").alias("guid_event"),
-        )
-    )
-    kept_old = target.alias("t").join(src.alias("s"), cond, "left_anti")
-    new_rows = ordered_surrogate_key(
-        src.alias("s").join(target.alias("t"), cond, "left_anti"),
-        "guid_event",
-        order_by=["event_id"],
-        start=guid_max + 1,
-    )
-    cols = target.columns
-    merged = (
-        kept_old.select(*cols)
-        .unionByName(matched.select(*cols))
-        .unionByName(new_rows.select(*cols))
+    merged = merge_keep_guid(
+        target, delta, FACT_KEYS, "guid_event", ("event_id",), guid_max + 1,
+        update=True,
     )
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     try:

@@ -513,6 +513,24 @@ def test_store_forget_generators_match_spark_on_alternate_sf(
     )
 
 
+def _assert_matches_oracle_at_sf001(spark, sf_dir, name):
+    """Registered query ``name`` against its ``oracle_sql()`` at sf0.01,
+    compared exactly as tools/check_oracles.py compares every query."""
+    import os
+
+    import __spark_entry__ as entrymod
+    from tools.check_oracles import canon, oracle_connection, value_repr
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf001):
+        pytest.skip(f"no sf0.01 testdata beside {sf_dir}")
+    got = canon(entrymod.queries()[name](spark, sf001).toPandas())
+    with oracle_connection(sf001) as con:
+        want = canon(con.execute(entrymod.oracle_sql()[name]).df())
+    assert list(got.columns) == list(want.columns)
+    assert value_repr(got) == value_repr(want)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -525,19 +543,29 @@ def test_store_forget_generators_match_spark_on_alternate_sf(
 )
 def test_dedup_gate_matches_expected_oracle_at_sf001(spark, sf_dir, name):
     """The incremental dedup gates against their committed expected
-    parquet, at sf0.01 (the only scale those files are generated for),
-    compared exactly as tools/check_oracles.py compares every query."""
-    import os
+    parquet, at sf0.01 (the only scale those files are generated for)."""
+    _assert_matches_oracle_at_sf001(spark, sf_dir, name)
 
-    import duckdb
 
-    import __spark_entry__ as entrymod
-    from tools.check_oracles import canon, value_repr
-
-    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
-    if not os.path.isdir(sf001):
-        pytest.skip(f"no sf0.01 testdata beside {sf_dir}")
-    got = canon(entrymod.queries()[name](spark, sf001).toPandas())
-    want = canon(duckdb.connect().execute(entrymod.oracle_sql()[name]).df())
-    assert list(got.columns) == list(want.columns)
-    assert value_repr(got) == value_repr(want)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "event_raw",
+        "dim_event",
+        "dim_user",
+        "dim_parameter",
+        "dim_item",
+        "fact_events",
+        "kpi_view_count_by_period",
+        "kpi_item_view_rank_by_period",
+        "kpi_most_viewed_item_latest_period",
+        "kpi_top_event_type_by_period",
+        "kpi_view_trend_by_period",
+        "kpi_top_items_view_share",
+    ],
+)
+def test_paper_query_matches_oracle_at_sf001(spark, sf_dir, name):
+    """The paper's star-schema builds and KPI views (the warehouse view
+    SQL of ``plans/marketing.KPI_SQL``) against their DuckDB SQL over
+    the sf0.01 tables."""
+    _assert_matches_oracle_at_sf001(spark, sf_dir, name)

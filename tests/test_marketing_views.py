@@ -1,6 +1,7 @@
 """KPI view layer: shape + invariant tests against the sf0.001 tables
-(value-level parity with DuckDB is covered by tools/check_oracles.py and
-the driver's correctness gate; these are fast structural guards)."""
+(value-level parity with DuckDB is covered by
+tests/test_expected_oracles.py::test_paper_query_matches_oracle_at_sf001
+and tools/check_oracles.py; these are fast structural guards)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import marketin
 
 
 def test_view_count_schema_and_order(spark, sf_dir):
-    df = marketing.view_count_by_period(spark, sf_dir)
+    df = marketing.kpi_view("view_count_by_period", spark, sf_dir)
     assert df.columns == ["period", "item_view"]
     rows = df.collect()
     assert len(rows) > 0
@@ -19,7 +20,7 @@ def test_view_count_schema_and_order(spark, sf_dir):
 
 
 def test_item_rank_dense_within_period(spark, sf_dir):
-    df = marketing.item_view_rank_by_period(spark, sf_dir)
+    df = marketing.kpi_view("item_view_rank_by_period", spark, sf_dir)
     one_period = df.filter(F.col("period") == df.select("period").first()[0])
     ranks = sorted({r["item_view_rank"] for r in one_period.collect()})
     # dense: ranks start at 1 with no gaps
@@ -28,23 +29,17 @@ def test_item_rank_dense_within_period(spark, sf_dir):
 
 
 def test_most_viewed_single_row(spark, sf_dir):
-    df = marketing.most_viewed_item_latest_period(spark, sf_dir)
+    df = marketing.kpi_view("most_viewed_item_latest_period", spark, sf_dir)
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["item_view"] >= 1
 
 
 def test_top_event_type_one_winner_per_period(spark, sf_dir):
-    df = marketing.top_event_type_by_period(spark, sf_dir)
+    df = marketing.kpi_view("top_event_type_by_period", spark, sf_dir)
     counts = df.groupBy("period").count().collect()
     assert all(r["count"] == 1 for r in counts)
     assert all(r["type_rank"] == 1 for r in df.collect())
-
-
-def test_register_kpi_views(spark, sf_dir):
-    marketing.register_kpi_views(spark, sf_dir)
-    out = spark.sql("SELECT * FROM view_count_by_period")
-    assert out.count() > 0
 
 
 def test_fact_guid_contiguous(spark, sf_dir):
@@ -59,7 +54,7 @@ def test_fact_guid_contiguous(spark, sf_dir):
 
 
 def test_view_trend_deltas_consistent(spark, sf_dir):
-    df = marketing.view_trend_by_period(spark, sf_dir)
+    df = marketing.kpi_view("view_trend_by_period", spark, sf_dir)
     rows = df.collect()
     assert df.columns == [
         "period", "item_view", "prev_view", "view_delta", "pct_change"
@@ -75,7 +70,7 @@ def test_view_trend_deltas_consistent(spark, sf_dir):
 
 
 def test_top_items_view_share_bounds(spark, sf_dir):
-    df = marketing.top_items_view_share(spark, sf_dir)
+    df = marketing.kpi_view("top_items_view_share", spark, sf_dir)
     rows = df.collect()
     assert 0 < len(rows) <= 10
     assert [r["view_rank"] for r in rows] == list(range(1, len(rows) + 1))

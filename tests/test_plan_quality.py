@@ -25,7 +25,7 @@ def _plan(df) -> str:
 def test_kpi_join_broadcasts_dim(spark):
     # The fact⋈dim join (Q3) must broadcast the small item dim, never
     # shuffle the fact on the join key.
-    plan = _plan(marketing.item_view_rank_by_period(spark, SF))
+    plan = _plan(marketing.kpi_view("item_view_rank_by_period", spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -34,7 +34,7 @@ def test_kpi_filter_pushdown_and_pruning(spark):
     # Q2's event_type filter reaches the parquet scan, and the scan
     # reads only the columns the query needs (events has 6 columns;
     # the KPI needs ts/event_type/props).
-    plan = _plan(marketing.view_count_by_period(spark, SF))
+    plan = _plan(marketing.kpi_view("view_count_by_period", spark, SF))
     assert "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,view)]" in plan
     # the nanos ts column surfaces as bigint (legacy-conf readers) or
     # timestamp_ntz (native nanos readers) — pruning is what's pinned
@@ -50,7 +50,7 @@ def test_kpi_filter_pushdown_and_pruning(spark):
 def test_top1_plans_as_take_ordered(spark):
     # ORDER BY … LIMIT 1 (Q11) must plan as TakeOrderedAndProject —
     # a true distributed top-k, not a global sort.
-    plan = _plan(marketing.most_viewed_item_latest_period(spark, SF))
+    plan = _plan(marketing.kpi_view("most_viewed_item_latest_period", spark, SF))
     assert "TakeOrderedAndProject(limit=1" in plan
 
 

@@ -47,6 +47,18 @@ def value_repr(df: pd.DataFrame) -> list[tuple]:
     return out
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of
+    ``sf_dir``: the table names ``oracle_sql()`` queries."""
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{name}.parquet')"
+        )
+    return con
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
     vanilla = "--vanilla" in sys.argv[1:]
@@ -66,12 +78,7 @@ def main() -> None:
         )
     else:
         spark = get_spark("oracle_check")
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{name}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

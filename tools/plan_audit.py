@@ -54,7 +54,6 @@ BOUNDED_BNLJ_OK = {
     "fact_events": "1-row min/max bounds for surrogate-key buckets",
     "kpi_most_viewed_item_latest_period": "1-row MAX(period) scalar subquery",
     "kpi_top_items_view_share": "1-row MAX(period) scalar subquery",
-    "most_viewed_item_latest_period": "1-row MAX(period) scalar subquery",
     "high_value_order_customers": "1-row AVG(price) scalar subquery",
     # operators/quality.py ref-constraint: two 1-row aggregates (total
     # row count x orphan count) crossed into the summary row

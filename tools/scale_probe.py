@@ -561,10 +561,7 @@ def main() -> None:
             os.path.join(star_dir, f"{tname}.parquet")
         )
 
-    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import (
-        marketing,
-    )
-
+    import __spark_entry__ as entrymod  # noqa: PLC0415
     from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.operators import (
         similarity,
         sketches,
@@ -573,14 +570,18 @@ def main() -> None:
         relational,
     )
 
+    registry = entrymod.queries()
     star_ops = {
-        "fact_events": marketing.build_f_events,
-        "kpi_view_count_by_period": marketing.view_count_by_period,
-        "kpi_item_view_rank_by_period": marketing.item_view_rank_by_period,
-        "kpi_most_viewed_item_latest_period": (
-            marketing.most_viewed_item_latest_period
-        ),
-        "kpi_top_event_type_by_period": marketing.top_event_type_by_period,
+        **{
+            name: registry[name]
+            for name in (
+                "fact_events",
+                "kpi_view_count_by_period",
+                "kpi_item_view_rank_by_period",
+                "kpi_most_viewed_item_latest_period",
+                "kpi_top_event_type_by_period",
+            )
+        },
         # gap-fill's grid is domain-bounded: events replication must not
         # grow it (growth should track the daily-agg scan, not the grid)
         "order_priority_daily_gapfill": relational.order_priority_daily_gapfill,
@@ -598,8 +599,6 @@ def main() -> None:
     # registers cap at sketch size, the anomaly window is per-day, the
     # quality checks are one aggregate pass, the bloom build side is
     # the replicated orders slice).
-    import __spark_entry__ as entrymod  # noqa: PLC0415
-
     star_ops.update(
         {
             "cms_user_counts": entrymod.q_cms_user_counts,

@@ -3864,7 +3864,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # star-schema builds (SURVEY §2.2 P1-P9; dim_user/dim_parameter/
         # dim_item are shape-siblings of dim_event → tail)
         "event_raw": marketing.build_event_raw,
-        "dim_event": marketing.build_d_event,
+        "dim_event": partial(marketing.build_dim, "d_event"),
         "fact_events": marketing.build_f_events,
         # KPI views (SURVEY §2.3 Q1-Q13 + the README.md:14-16 Power-BI
         # layer questions)
@@ -3948,8 +3948,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_window_revenue": relational.session_window_revenue,
         "user_event_extremes": relational.user_event_extremes,
         "numeric_column_profile": relational.numeric_column_profile,
-        "dim_user": marketing.build_d_user,
-        "dim_parameter": marketing.build_d_parameter,
+        "dim_user": partial(marketing.build_dim, "d_user"),
+        "dim_parameter": partial(marketing.build_dim, "d_parameter"),
         "dedup_near_docs": q_dedup_near_docs,
         "exact_dup_groups": q_exact_dup_groups,
         "embedding_topk_ivf": q_embedding_topk_ivf,

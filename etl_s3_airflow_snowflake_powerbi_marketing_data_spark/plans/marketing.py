@@ -8,10 +8,15 @@ spans one month, so the reference's ``YEAR(event_time)`` becomes
 ``to_date(ts)`` — same date-part-extraction + groupBy operator class
 (Q4), non-degenerate grouping.
 
-Star-schema builds mirror SURVEY.md §2.2 (P1-P9). Each KPI view has one
-definition, its SQL body in ``KPI_SQL``; the warehouse registers it over
-its persisted tables (``WAREHOUSE_KPI_SQL``) and ``kpi_view`` runs it
-over the synthetic tables. The first four mirror
+Star-schema builds mirror SURVEY.md §2.2 (P1-P9). The three append-only
+dims share one key selection (``DIM_KEYS``, ``dim_keys``) and every
+numbered table one surrogate-key spec (``GUIDS``): the registered
+``dim_*``/``fact_events`` queries number a whole day with them, the
+warehouse stages (``plans/pipeline.py``) only a merge's new keys.
+
+Each KPI view has one definition, its SQL body in ``KPI_SQL``; the
+warehouse registers it over its persisted tables (``WAREHOUSE_KPI_SQL``)
+and ``kpi_view`` runs it over the synthetic tables. The first four mirror
 `etl_s3_snowflake_aggregated_views.py` (Q1-Q13), the last two the
 reference's Power BI questions (`README.md:14-16`):
 
@@ -31,6 +36,8 @@ offsets, never an all-rows-on-one-task window.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,30 +82,63 @@ def build_event_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ordered_surrogate_key(flat, "guid_event_raw", order_by=["event_id"])
 
 
-def build_d_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event dim: distinct event ids + contiguous guid.
+class Guid(NamedTuple):
+    """A table's surrogate key: its column and the order rows are
+    numbered in. The first load numbers the whole table by ``order``
+    (its leading column newest-first when ``newest_first``); every
+    merge after numbers only the keys new to the table, by
+    ``merge_order`` when given, else by ``order``."""
 
-    ↔ `etl_s3_snowflake_d_event.py:24-30` (drop_duplicates on event_id →
-    range index). Deterministic survivor: keys are already unique per
-    row; ordering by the key itself pins guid assignment.
-    """
-    events = load_table(spark, sf_dir, "events").select("event_id").distinct()
-    return ordered_surrogate_key(events, "guid_event", order_by=["event_id"])
+    col: str
+    order: tuple[str, ...]
+    newest_first: bool = False
+    merge_order: tuple[str, ...] = ()
+
+    def number(self, rows: DataFrame) -> DataFrame:
+        return ordered_surrogate_key(
+            rows, self.col, order_by=list(self.order),
+            descending=self.newest_first,
+        )
 
 
-def build_d_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User dim ↔ `etl_s3_snowflake_d_user.py:28-34`."""
-    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    return ordered_surrogate_key(users, "guid_user", order_by=["user_id"])
+# The append-only dims: dim -> (events column, natural key). Each is the
+# distinct keys of the day's events, numbered in key order
+# ↔ `etl_s3_snowflake_d_event.py:24-30`, `…_d_user.py:28-34`,
+# `…_d_parameter.py:24-36` (drop_duplicates → range index); event_type
+# plays parameter_name. The keys are unique per row, so ordering by the
+# key itself pins guid assignment.
+DIM_KEYS: dict[str, tuple[str, str]] = {
+    "d_event": ("event_id", "event_id"),
+    "d_user": ("user_id", "user_id"),
+    "d_parameter": ("event_type", "parameter_name"),
+}
+
+# The surrogate key of every numbered warehouse table. The fact's first
+# load numbers newest-first (`etl_s3_snowflake_f_events.py:36-43`); its
+# later inserts continue in event_id order.
+GUIDS: dict[str, Guid] = {
+    "d_event": Guid("guid_event", ("event_id",)),
+    "d_user": Guid("guid_user", ("user_id",)),
+    "d_parameter": Guid("guid_parameter", ("parameter_name",)),
+    "f_events": Guid(
+        "guid_event", ("event_time", "event_id"), newest_first=True,
+        merge_order=("event_id",),
+    ),
+}
 
 
-def build_d_parameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parameter dim (event_type plays parameter_name)
-    ↔ `etl_s3_snowflake_d_parameter.py:24-36`."""
-    params = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("parameter_name")
-    ).distinct()
-    return ordered_surrogate_key(params, "guid_parameter", order_by=["parameter_name"])
+def dim_keys(events: DataFrame, dim: str) -> DataFrame:
+    """The distinct natural keys of ``dim`` in ``events`` (the source
+    events table or the warehouse's ``event_raw``), without a guid."""
+    source, key = DIM_KEYS[dim]
+    return events.select(F.col(source).alias(key)).distinct()
+
+
+def build_dim(dim: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dim ``dim`` of ``DIM_KEYS`` over the events of ``sf_dir``, with
+    its contiguous guid."""
+    events = load_table(spark, sf_dir, "events")
+    return GUIDS[dim].number(dim_keys(events, dim))
 
 
 def build_d_item(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,10 +161,12 @@ def build_d_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fact_columns(flat: DataFrame) -> DataFrame:
-    """Fact-table projection: renames + item-key normalization to long
-    (the VARCHAR-coercion fix, SURVEY.md §1.2 — float-formatted text
-    ids parse via the decimal path instead of silently nulling)."""
+def fact_columns(flat: DataFrame) -> DataFrame:
+    """Fact-table projection of the flat events (``_flat_events`` or
+    the warehouse's ``event_raw``), without a guid: renames + item-key
+    normalization to long (the VARCHAR-coercion fix, SURVEY.md §1.2 —
+    float-formatted text ids parse via the decimal path instead of
+    silently nulling)."""
     return flat.select(
         "event_id",
         F.col("ts").alias("event_time"),
@@ -146,10 +188,7 @@ def build_f_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     that order via the range-partitioned two-pass numbering (no
     single-partition stage even on the full fact).
     """
-    fact = _fact_columns(_flat_events(spark, sf_dir))
-    return ordered_surrogate_key(
-        fact, "guid_event", order_by=["event_time", "event_id"], descending=True
-    )
+    return GUIDS["f_events"].number(fact_columns(_flat_events(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -309,7 +348,7 @@ def kpi_view(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
     job (its parquet footer read).
     """
     sql = KPI_SQL[name]
-    tables = {"f_events": _fact_columns(_flat_events(spark, sf_dir))}
+    tables = {"f_events": fact_columns(_flat_events(spark, sf_dir))}
     if "{d_item}" in sql:
         tables["d_item"] = build_d_item(spark, sf_dir)
     return spark.sql(sql, **tables)

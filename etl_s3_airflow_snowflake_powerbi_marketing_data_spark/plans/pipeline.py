@@ -9,6 +9,13 @@ named warehouse tables materialize. An external scheduler (Airflow)
 invokes :func:`run_daily_pipeline` once per day — the engine/scheduler
 split the north star prescribes.
 
+As in the reference, only raw ingest reads the day's events from the
+source: ``d_event``, ``d_user``, ``d_parameter`` and ``f_events`` read
+the warehouse's parsed ``event_raw`` (`etl_s3_snowflake_d_event.py:55`,
+`…_d_user.py:58`, `…_d_parameter.py:60`, `…_f_events.py:74`), so the
+payload JSON is parsed once a day. ``d_item`` reads the item source
+table.
+
 MERGE targets persist as parquet directories under ``warehouse_dir``.
 Each merge is write-to-staging-then-swap (the honest plain-parquet
 atomicity fallback — reads of the old target feed the merge plan, so
@@ -21,7 +28,9 @@ deliberate, documented fix: the reference numbers each day's delta from
 warehouse (a latent reference bug — surrogate keys stop being keys).
 Here matched rows keep their stable guid and inserted rows continue
 contiguously from the warehouse max, so guids stay unique and existing
-rows never renumber:
+rows never renumber. The stages hand over rows without a guid and
+``_merge_into`` numbers them once: the whole table on the first load,
+only the new keys on each merge after.
 - dims merge with ``if_conflicts="ignore"`` on the natural key —
   append-only; pre-existing rows never change.
 - ``d_item`` and ``f_events`` merge with ``if_conflicts="update"``
@@ -35,6 +44,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -109,12 +119,19 @@ def _table_exists(path: str) -> bool:
     return os.path.exists(path)
 
 
-def _read_tbl(spark: SparkSession, path: str) -> DataFrame:
+def _read_tbl(spark: SparkSession, path: str, declared: bool = True) -> DataFrame:
+    """The latest state of a warehouse table. A table of
+    :data:`WAREHOUSE_TABLES` is read with its declared schema, so the
+    scan plans without a footer-inference job; ``declared=False`` reads
+    the schema the files carry (``publish_catalog`` checks it)."""
+    schema = WAREHOUSE_SCHEMAS.get(os.path.basename(path)) if declared else None
+    paths = [path]
     if _is_versioned_table(path):
         from ..sources import versioned as vt  # noqa: PLC0415
 
-        return vt.read_version(spark, path)
-    return spark.read.parquet(path)
+        paths = [os.path.join(path, p) for p in vt.snapshot_prefixes(path)]
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def _write_tbl(result: DataFrame, path: str) -> None:
@@ -132,27 +149,27 @@ def _merge_into(
     fresh: DataFrame,
     keys: tuple[str, ...],
     update: bool,
-    guid_col: str | None = None,
-    guid_order: tuple[str, ...] = (),
+    guid: marketing.Guid | None = None,
 ) -> None:
     """Bootstrap on first run; MERGE (ignore/update) afterwards.
 
-    When ``guid_col`` is given, surrogate keys stay globally unique
-    across daily loads (``merge_keep_guid``): new rows are numbered
-    after the warehouse max, ordered by ``guid_order``. Without this,
-    each day's delta would re-number from 1 and collide with existing
-    guids."""
+    ``fresh`` carries no surrogate key; with ``guid`` its rows are
+    numbered exactly once. The first load numbers the whole table; each
+    merge after numbers only the keys new to the warehouse, after its
+    max (``merge_keep_guid``), so guids stay globally unique across
+    daily loads instead of each day's delta re-numbering from 1."""
     if not _table_exists(result_path):
-        _write_tbl(fresh, result_path)
+        _write_tbl(fresh if guid is None else guid.number(fresh), result_path)
         return
     target = _read_tbl(spark, result_path)
-    if guid_col is None:
+    if guid is None:
         merge = merge_update if update else merge_ignore
         merged = merge(target, fresh, list(keys))
     else:
-        tgt_max = target.agg(F.max(guid_col)).first()[0] or 0
+        tgt_max = target.agg(F.max(guid.col)).first()[0] or 0
         merged = merge_keep_guid(
-            target, fresh, keys, guid_col, guid_order, tgt_max + 1, update
+            target, fresh, keys, guid.col, guid.merge_order or guid.order,
+            tgt_max + 1, update,
         )
     _write_tbl(merged, result_path)
 
@@ -166,16 +183,24 @@ def _stage_raw_ingest(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> N
     )
 
 
-def _stage_d_event(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
+def _event_raw(spark: SparkSession, warehouse_dir: str) -> DataFrame:
+    """The day's parsed events as raw ingest staged them: what every
+    event-derived stage reads, in place of the source."""
+    return _read_tbl(spark, _table_dir(warehouse_dir, "event_raw"))
+
+
+def _stage_dim(
+    dim: str, spark: SparkSession, sf_dir: str, warehouse_dir: str
+) -> None:
     # Dims: append-only merges on the natural key (S6).
+    rows = marketing.dim_keys(_event_raw(spark, warehouse_dir), dim)
     _merge_into(
         spark,
-        _table_dir(warehouse_dir, "d_event"),
-        marketing.build_d_event(spark, sf_dir),
-        ("event_id",),
+        _table_dir(warehouse_dir, dim),
+        rows,
+        tuple(rows.columns),
         update=False,
-        guid_col="guid_event",
-        guid_order=("event_id",),
+        guid=marketing.GUIDS[dim],
     )
 
 
@@ -190,40 +215,15 @@ def _stage_d_item(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
     )
 
 
-def _stage_d_parameter(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
-    _merge_into(
-        spark,
-        _table_dir(warehouse_dir, "d_parameter"),
-        marketing.build_d_parameter(spark, sf_dir),
-        ("parameter_name",),
-        update=False,
-        guid_col="guid_parameter",
-        guid_order=("parameter_name",),
-    )
-
-
-def _stage_d_user(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
-    _merge_into(
-        spark,
-        _table_dir(warehouse_dir, "d_user"),
-        marketing.build_d_user(spark, sf_dir),
-        ("user_id",),
-        update=False,
-        guid_col="guid_user",
-        guid_order=("user_id",),
-    )
-
-
 def _stage_f_events(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
     # SCD-1 upsert on the composite fact key (S7).
     _merge_into(
         spark,
         _table_dir(warehouse_dir, "f_events"),
-        marketing.build_f_events(spark, sf_dir),
+        marketing.fact_columns(_event_raw(spark, warehouse_dir)),
         FACT_KEYS,
         update=True,
-        guid_col="guid_event",
-        guid_order=("event_id",),
+        guid=marketing.GUIDS["f_events"],
     )
 
 
@@ -286,7 +286,7 @@ def publish_catalog(
     for name in tables:
         declared = StructType.fromDDL(WAREHOUSE_SCHEMAS[name])
         tdir = _table_dir(warehouse_dir, name)
-        actual = _read_tbl(spark, tdir).schema
+        actual = _read_tbl(spark, tdir, declared=False).schema
         if actual != declared:
             raise ValueError(
                 f"schema drift in warehouse table {name!r}: declared "
@@ -349,13 +349,15 @@ def _stage_aggregated_views(
 # `etl_s3_snowflake_f_events.py:98-104` → aggregated_views). Each stage
 # is independently runnable (``main --stage``), so an external
 # scheduler can map the chain 1:1 onto its own task graph — see
-# ``orchestration.build_dag`` for the Airflow factory.
+# ``orchestration.build_dag`` for the Airflow factory. As there, a
+# stage reads what the stages before it wrote: the event-derived dims
+# and the fact read the day's ``event_raw``.
 PIPELINE_STAGES = {
     "raw_ingest": _stage_raw_ingest,
-    "d_event": _stage_d_event,
+    "d_event": partial(_stage_dim, "d_event"),
     "d_item": _stage_d_item,
-    "d_parameter": _stage_d_parameter,
-    "d_user": _stage_d_user,
+    "d_parameter": partial(_stage_dim, "d_parameter"),
+    "d_user": partial(_stage_dim, "d_user"),
     "f_events": _stage_f_events,
     "aggregated_views": _stage_aggregated_views,
 }
@@ -368,7 +370,12 @@ def run_stage(
     stage: str,
     materialize_views: bool = False,
 ) -> None:
-    """Run a single named pipeline stage (one reference DAG's worth)."""
+    """Run a single named pipeline stage (one reference DAG's worth).
+
+    ``d_event``, ``d_user``, ``d_parameter`` and ``f_events`` read the
+    day from the warehouse's ``event_raw``, not from ``sf_dir``: rerun
+    ``raw_ingest`` for a day before rerunning any of them, or they merge
+    whatever day ``event_raw`` last staged."""
     if stage not in PIPELINE_STAGES:
         raise ValueError(
             f"unknown stage {stage!r}; choose from {list(PIPELINE_STAGES)}"
@@ -597,6 +604,8 @@ def main(argv: list[str] | None = None) -> None:
         "--stage",
         choices=list(PIPELINE_STAGES),
         help="run one stage only (one reference DAG's worth); "
+        "d_event, d_user, d_parameter and f_events read the day from "
+        "event_raw, so run raw_ingest for that day first; "
         "default runs the full daily cycle",
     )
     args = parser.parse_args(argv)

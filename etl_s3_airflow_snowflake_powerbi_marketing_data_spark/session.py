@@ -137,6 +137,14 @@ def get_spark(
         # Spark's parquet reader refuses; read as long and convert in
         # tables.load_table (sub-microsecond parts are zero, so lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Timestamps land as INT64 TIMESTAMP(MICROS), not the INT96
+        # default: on v2 pages an int64 column is DELTA_BINARY_PACKED,
+        # which halves the warehouse fact's event_time column against
+        # dictionary-encoded INT96, and DuckDB and pyarrow read it as a
+        # UTC timestamp. Spark reads INT96 files written before this in
+        # the same scan. A session conf on purpose: the parquet writer
+        # takes the type from the session, never from a writer option.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.warehouse.dir", _process_warehouse_dir())
         .config(
             "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",

@@ -371,26 +371,51 @@ def test_publish_catalog_analyze_records_cbo_stats(spark, warehouse):
     assert stats and "rows" in stats[0]["data_type"]
 
 
-def _column_chunks(table_dir):
-    """Every parquet column chunk under a table dir (plain, versioned
-    ``data/v*`` prefixes, or ``event_date=*`` partitions)."""
+def _parquet_metadata(table_dir):
+    """The footer of every parquet file under a table dir (plain,
+    versioned ``data/v*`` prefixes, or ``event_date=*`` partitions)."""
     import os
 
     import pyarrow.parquet as pq
 
     for root, _, files in os.walk(table_dir):
         for name in files:
-            if not name.endswith(".parquet"):
+            if name.endswith(".parquet"):
+                yield pq.ParquetFile(os.path.join(root, name)).metadata
+
+
+def _column_chunks(table_dir):
+    """Every parquet column chunk under a table dir."""
+    for meta in _parquet_metadata(table_dir):
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            yield from (rg.column(c) for c in range(rg.num_columns))
+
+
+def _timestamp_columns(table_dir):
+    """Names of the columns stored as timestamps (INT96 or a TIMESTAMP
+    logical type) under a table dir, after asserting each is INT64
+    TIMESTAMP(MICROS)."""
+    import json
+
+    names = set()
+    for meta in _parquet_metadata(table_dir):
+        for i in range(len(meta.schema)):
+            col = meta.schema.column(i)
+            logical = col.logical_type
+            if col.physical_type != "INT96" and logical.type != "TIMESTAMP":
                 continue
-            meta = pq.ParquetFile(os.path.join(root, name)).metadata
-            for g in range(meta.num_row_groups):
-                rg = meta.row_group(g)
-                yield from (rg.column(c) for c in range(rg.num_columns))
+            where = (table_dir, col.path, col.physical_type, str(logical))
+            assert col.physical_type == "INT64", where
+            assert json.loads(logical.to_json())["timeUnit"] == "microseconds", where
+            names.add(col.path)
+    return names
 
 
 def _assert_warehouse_encoding(table_dir):
     chunks = list(_column_chunks(table_dir))
     assert chunks, table_dir
+    ts_columns = _timestamp_columns(table_dir)
     delta_packed = 0
     for ch in chunks:
         where = (table_dir, ch.path_in_schema, ch.encodings)
@@ -408,6 +433,7 @@ def _assert_warehouse_encoding(table_dir):
             delta_packed += 1
     # every table carries a unique key or surrogate key column
     assert delta_packed, table_dir
+    return ts_columns
 
 
 def _day2_source(spark, tmp_path):
@@ -449,9 +475,11 @@ def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
     for day in (SF, day2):
         pipeline.run_daily_pipeline(spark, day, plain, materialize_views=True)
         pipeline.run_daily_pipeline(spark, day, versioned, versioned=True)
+    timestamps = {"event_raw": {"ts"}, "f_events": {"event_time"}}
     for wh in (plain, versioned):
         for name in pipeline.WAREHOUSE_TABLES:
-            _assert_warehouse_encoding(os.path.join(wh, name))
+            got = _assert_warehouse_encoding(os.path.join(wh, name))
+            assert got == timestamps.get(name, set()), name
     for view in marketing.WAREHOUSE_KPI_SQL:
         chunks = list(_column_chunks(os.path.join(plain, f"kpi_{view}")))
         assert chunks and {ch.compression for ch in chunks} == {"ZSTD"}, view
@@ -462,7 +490,7 @@ def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
     for day in (fresh, delta):
         fact = pipeline.merge_fact_partitioned(spark, part, day)
         rollup = pipeline.update_daily_rollup(spark, part, fact, day)
-    _assert_warehouse_encoding(fact)
+    assert _assert_warehouse_encoding(fact) == {"event_time"}
     rollup_chunks = list(_column_chunks(rollup))
     assert rollup_chunks and {ch.compression for ch in rollup_chunks} == {"ZSTD"}
 
@@ -472,3 +500,174 @@ def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
     for ch in _column_chunks(store):
         assert ch.compression == default_codec
         assert "DELTA_BINARY_PACKED" not in ch.encodings
+
+
+def _jobs_run(spark, action):
+    """The number of Spark jobs ``action()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    # setJobGroup also sets the description later actions show, so put
+    # back every thread-local property it sets
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {p: sc.getLocalProperty(p) for p in props}
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        for p, value in saved.items():
+            sc.setLocalProperty(p, value)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_declared_warehouse_reads_plan_without_a_job(spark, warehouse):
+    # A warehouse table read takes its declared schema, so planning it
+    # runs no footer-inference job; the catalog's drift check keeps the
+    # inferring read, which does run one.
+    import os
+
+    wh, _ = warehouse
+    for name in pipeline.WAREHOUSE_TABLES:
+        path = os.path.join(wh, name)
+        assert _jobs_run(spark, lambda: pipeline._read_tbl(spark, path)) == 0, name
+        declared = pipeline._read_tbl(spark, path)
+        inferred = pipeline._read_tbl(spark, path, declared=False)
+        assert declared.schema == inferred.schema, name
+        assert sorted(map(tuple, declared.collect())) == sorted(
+            map(tuple, inferred.collect())
+        ), name
+    path = os.path.join(wh, "f_events")
+    assert _jobs_run(
+        spark, lambda: pipeline._read_tbl(spark, path, declared=False)
+    ) >= 1
+
+
+def test_day2_stages_read_event_raw_and_number_new_keys_once(
+    spark, tmp_path, monkeypatch
+):
+    """Only raw ingest reads the source: the day-2 ``d_event`` and
+    ``f_events`` merges scan the warehouse's ``event_raw`` and their own
+    table, and number rows once (the new keys). A guid the day's rows
+    carried would be dropped by the merge, but its bucket join to the
+    offsets would stay in the plan: Catalyst prunes the unused window,
+    not the inner join."""
+    import os
+
+    wh = str(tmp_path / "wh")
+    stages = ("raw_ingest", "d_event", "f_events")
+    for stage in stages:
+        pipeline.run_stage(spark, SF, wh, stage)
+    day2 = _day2_source(spark, tmp_path)
+    written = {}
+    write = pipeline._write_tbl
+
+    def spy(df, path):
+        written[os.path.basename(path)] = df
+        write(df, path)
+
+    monkeypatch.setattr(pipeline, "_write_tbl", spy)
+    for stage in stages:
+        pipeline.run_stage(spark, day2, wh, stage)
+    for name in ("d_event", "f_events"):
+        df = written[name]
+        scanned = {os.path.basename(os.path.dirname(f)) for f in df.inputFiles()}
+        assert scanned == {"event_raw", name}, (name, scanned)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("row_number() windowspecdefinition(__bucket") == 1, name
+        assert plan.count("Join Inner, (__bucket") == 1, name
+
+
+@pytest.mark.parametrize("versioned", [False, True], ids=["plain", "versioned"])
+def test_int96_warehouse_upgrades_to_micros_on_merge(spark, tmp_path, versioned):
+    """A warehouse whose day 1 was written with INT96 timestamps (the
+    Spark default before TIMESTAMP_MICROS) merges day 2 under the
+    session's micros default into exactly the warehouse a micros-only
+    history writes, every current timestamp column stored as micros."""
+    import os
+
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    assert spark.conf.get(conf) == "TIMESTAMP_MICROS"
+    day2 = _day2_source(spark, tmp_path)
+    upgraded, micros = str(tmp_path / "upgraded"), str(tmp_path / "micros")
+    spark.conf.set(conf, "INT96")
+    try:
+        pipeline.run_daily_pipeline(spark, SF, upgraded, versioned=versioned)
+    finally:
+        spark.conf.set(conf, "TIMESTAMP_MICROS")
+    assert {
+        ch.physical_type
+        for ch in _column_chunks(os.path.join(upgraded, "f_events"))
+        if ch.path_in_schema == "event_time"
+    } == {"INT96"}
+    pipeline.run_daily_pipeline(spark, day2, upgraded, versioned=versioned)
+    for day in (SF, day2):
+        pipeline.run_daily_pipeline(spark, day, micros, versioned=versioned)
+    timestamps = {"event_raw": {"ts"}, "f_events": {"event_time"}}
+    for name in pipeline.WAREHOUSE_TABLES:
+        path = os.path.join(upgraded, name)
+        # the files of the table's current state (a versioned table keeps
+        # day 1's INT96 prefix for time travel)
+        current = (
+            [os.path.join(path, p) for p in vt.snapshot_prefixes(path)]
+            if versioned
+            else [path]
+        )
+        stored = set().union(*(_timestamp_columns(d) for d in current))
+        assert stored == timestamps.get(name, set()), name
+        got, want = (
+            sorted(map(tuple, pipeline._read_tbl(spark, os.path.join(wh, name)).collect()))
+            for wh in (upgraded, micros)
+        )
+        assert got == want, name
+
+
+def test_int96_and_micros_timestamp_files(spark, tmp_path):
+    """Spark reads INT96 and TIMESTAMP(MICROS) files of one table in one
+    scan; pyarrow reads the micros files as UTC timestamps and DuckDB as
+    TIMESTAMP WITH TIME ZONE, with the same instants."""
+    import glob
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    table = str(tmp_path / "t")
+    df = spark.sql(
+        "SELECT id, timestamp_micros(1700000000123456 + id * 86400000001) AS ts"
+        " FROM range(4)"
+    )
+    spark.conf.set(conf, "INT96")
+    try:
+        df.filter("id < 2").write.parquet(table)
+    finally:
+        spark.conf.set(conf, "TIMESTAMP_MICROS")
+    old = set(glob.glob(f"{table}/*.parquet"))
+    df.filter("id >= 2").write.mode("append").parquet(table)
+    new = sorted(set(glob.glob(f"{table}/*.parquet")) - old)
+    assert {
+        ch.physical_type for ch in _column_chunks(table) if ch.path_in_schema == "ts"
+    } == {"INT96", "INT64"}
+    want = sorted(map(tuple, df.collect()))
+    for reader in (spark.read, spark.read.schema("id BIGINT, ts TIMESTAMP")):
+        assert sorted(map(tuple, reader.parquet(table).collect())) == want
+
+    micros = [r for r in want if r[0] >= 2]
+    arrow = pq.read_table(new)
+    assert str(arrow.schema.field("ts").type) == "timestamp[us, tz=UTC]"
+    assert sorted(
+        (i, t.replace(tzinfo=None)) for i, t in zip(*arrow.to_pydict().values())
+    ) == micros
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone = 'UTC'")
+        rel = con.sql(f"SELECT id, ts FROM read_parquet({new!r})")
+        assert dict(zip(rel.columns, rel.types))["ts"] == "TIMESTAMP WITH TIME ZONE"
+        assert sorted((i, t.replace(tzinfo=None)) for i, t in rel.fetchall()) == micros
+    finally:
+        con.close()

@@ -60,7 +60,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # (streaming gates fill it through the ``batch_secs`` hook with each
 # data trigger's ``addBatch`` seconds from Spark's progress reports);
 # bench.py copies the map into
-# BENCH_DETAIL_r{N}.json as "phases".
+# BENCH_DETAIL.json as "phases".
 PHASE_TIMINGS: dict[str, dict] = {}
 
 

@@ -119,42 +119,25 @@ def main() -> None:
 
     total = round(sum(timings.values()), 2)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Commit-able full per-query artifact (VERDICT r08 item 3): the
-    # driver's stdout tail truncates the ~189-entry map, leaving most
-    # queries invisible in BENCH_r{N}.json — so every run also writes
-    # BENCH_DETAIL_r{N}.json next to this script, where N = next round
-    # (max existing BENCH_r* + 1, override via SPARK_GRAFT_ROUND). The
-    # builder commits it so the judge can diff all queries
-    # round-over-round without depending on the driver's window.
-    import glob  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
+    # The full per-query artifact: the stdout summary below is kept
+    # short, so every run also writes the whole map to BENCH_DETAIL.json
+    # next to this script.
     here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p)))
-    ]
-    rnd = int(
-        os.environ.get("SPARK_GRAFT_ROUND", (max(rounds) + 1) if rounds else 1)
-    )
     detail = {
-        "round": rnd,
         "sf": sf_val,
         "n_queries": len(timings),
         "total_sec": total,
         "settled": settled,
-        # Phase split for the lifecycle smokes (VERDICT r11 item 5):
-        # setup_sec = index-train / store-seed / fixture staging;
-        # per_batch_sec = each streaming trigger's addBatch time (or
-        # each gate-loop commit's wall) — the steady-state micro-batch
-        # cost the 100 TB claim rests on. Populated by the
-        # instrumented builders during the LAST sweep pass (timings
-        # above stay min-of-sweeps).
+        # Phase split for the lifecycle smokes: setup_sec =
+        # index-train / store-seed / fixture staging; per_batch_sec =
+        # each streaming trigger's addBatch time (or each gate-loop
+        # commit's wall) — the steady-state micro-batch cost the 100 TB
+        # claim rests on. Populated by the instrumented builders during
+        # the LAST sweep pass (timings above stay min-of-sweeps).
         "phases": entrymod.PHASE_TIMINGS,
         "queries": dict(sorted(timings.items())),
     }
-    with open(os.path.join(here, f"BENCH_DETAIL_r{rnd:02d}.json"), "w") as fh:
+    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
     # Full per-query detail first (for humans and the judge) ...
     print(
@@ -168,16 +151,9 @@ def main() -> None:
             }
         )
     )
-    # ... then a compact summary-only line LAST. The driver tail-captures
-    # stdout into a bounded window; the ~4 KB per-query dict overflows it
-    # and truncates the JSON front, so BENCH_r05/r06 shipped with
-    # "parsed": null (VERDICT r06 item 2). A final line with no large
-    # payload always fits the window intact and parses. r13
-    # (VERDICT r12 item 1): the window is exactly 2000 chars (measured
-    # from BENCH_r12.json's saved tail) and the full queries map is
-    # ~6.3 KB — a tail-parsed per-query table is physically impossible,
-    # so the compact line instead NAMES the committed detail artifact
-    # (additive key; everything else unchanged).
+    # ... then a compact summary-only line LAST: a reader that keeps only
+    # the tail of stdout (about 2,000 characters) still gets a whole,
+    # parseable line, and it names the detail artifact for the rest.
     print(
         json.dumps(
             {
@@ -187,7 +163,7 @@ def main() -> None:
                 "sf": sf_val,
                 "n_queries": len(timings),
                 "max_query_sec": max(timings.values()) if timings else 0.0,
-                "queries_detail": f"BENCH_DETAIL_r{rnd:02d}.json",
+                "queries_detail": "BENCH_DETAIL.json",
             }
         )
     )

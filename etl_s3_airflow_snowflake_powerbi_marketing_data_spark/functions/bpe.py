@@ -11,12 +11,10 @@ driver below `driver_vocab_limit` (the bounded-driver-state posture
 of the PQ codebook and IVF centroid trainers in
 ``operators/similarity.py``), or as per-round Spark aggregations
 above it (only the single winning pair is collected per round). The
-sample-train variant (`train_bpe_merges`) remains for bounded-cost
-exploratory runs. The apply pass is the one deliberate pandas-UDF
-surface in this module: greedy lowest-rank merging is an iterative
-per-token loop no built-in expression can express, so it runs
-Arrow-batched with a per-batch word cache (Zipf makes the cache hit
-rate high), map-only, no shuffle.
+apply pass is the one deliberate pandas-UDF surface in this module:
+greedy lowest-rank merging is an iterative per-token loop no built-in
+expression can express, so it runs Arrow-batched with a per-batch word
+cache (Zipf makes the cache hit rate high), map-only, no shuffle.
 
 Everything is integer/string compute — no floats anywhere — so the
 pure-Python oracle replica (tools/gen_expected.py:gen_bpe_tokens) is
@@ -121,42 +119,6 @@ def _train_on_freqs(
     return merges
 
 
-def sample_texts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sample_docs: int = 500,
-) -> list[str]:
-    """Deterministic bounded training sample: the ``sample_docs``
-    lowest ``xxhash64(id)`` documents (ties: ascending id). The plan
-    is a TakeOrdered — per-partition top-N then one bounded merge,
-    never a global sort — and the collect is O(sample) by
-    construction."""
-    rows = (
-        df.select(
-            F.col(text_col).alias("t"),
-            F.xxhash64(F.col(id_col).cast("long")).alias("__h"),
-            F.col(id_col).alias("__i"),
-        )
-        .orderBy("__h", "__i")
-        .limit(sample_docs)
-        .collect()
-    )
-    return [r["t"] for r in rows]
-
-
-def train_bpe_merges(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_merges: int = 50,
-    sample_docs: int = 500,
-) -> list[tuple[str, str]]:
-    return train_merges_on_texts(
-        sample_texts(df, text_col, id_col, sample_docs), n_merges
-    )
-
-
 def _merge_pair_expr(col: str, a: str, b: str):
     """Left-to-right single-pass merge of adjacent ``(a, b)`` inside a
     symbol array, as a pure JVM-side ``aggregate`` fold (no UDF): the
@@ -222,7 +184,6 @@ def word_freq_table(
 def train_bpe_merges_spark(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     n_merges: int = 50,
     max_words: int | None = None,
     driver_vocab_limit: int = 200_000,
@@ -252,7 +213,6 @@ def train_bpe_merges_spark(
     Tie-break and stop rule (max freq, then lexicographically smallest
     pair; stop when the best pair occurs < 2 times) match
     `train_merges_on_texts` on both paths."""
-    del id_col  # kept for signature parity with train_bpe_merges
     words = word_freq_table(df, text_col, max_words, script_aware)
     # ONE probe job decides the path: a (limit+1)-bounded collect —
     # never more than driver_vocab_limit+1 rows reach the driver, and

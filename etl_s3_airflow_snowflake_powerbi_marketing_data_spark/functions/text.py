@@ -236,9 +236,9 @@ def unigram_surprisal(
     joins back on term, and the final doc-grain groupBy weights each
     term's surprisal by its in-doc count. Every post-explode shuffle
     carries (doc, term) rows, never token instances — the within-doc
-    repetition factor is pure shuffle savings at 100 TB
-    (SCALE_PROBE_r07 flagged the token-grain join as the steepest
-    curve in the repo; VERDICT r07 item 4).
+    repetition factor is pure shuffle savings at 100 TB (the 10×-data
+    scale probe found the token-grain join the steepest curve in the
+    repo).
 
     Output: (id_col, n_tokens, mean_surprisal, ppl_band); empty
     documents report surprisal 0.0 / band 'head'. Default thresholds

@@ -7,7 +7,7 @@ relies on it implicitly). Spark ships the same idea as the row-level
 runtime bloom filter (SPARK-32268), but it only engages when statistics
 make the planner confident. This module is the DETERMINISTIC, always-on
 form: build a bloom filter over the small side's join keys, broadcast
-it as a literal bitmap, and drop non-matching fact rows **map-side,
+it as a one-row bitmap, and drop non-matching fact rows **map-side,
 before the exchange** — at 100 TB the join's shuffle then carries only
 rows that can match (plus the documented false-positive fraction),
 instead of the whole fact table.
@@ -22,10 +22,9 @@ Determinism: positions come from ``xxhash64`` with per-probe literal
 seeds — no sampled statistics, no partition-order dependence; the same
 build rows always produce the same bitmap.
 
-Scale shape: the bitmap is ``n_bits / 64`` longs collected to the
-driver — O(filter size), a build-side artifact bounded by the caller's
-``n_bits`` cap, NEVER by data size (same class as the IVF centroid
-literals, operators/similarity.py). The membership test is a pure
+Scale shape: the bitmap is ``n_bits / 64`` longs in one broadcast row
+— O(filter size), a build-side artifact bounded by the caller's
+``n_bits`` cap, NEVER by data size. The membership test is a pure
 projection (array indexing + bit ops) that runs inside whole-stage
 codegen; nothing about the probe side ever moves until after the
 filter.
@@ -38,8 +37,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# 2^26 bits = 8 MiB of longs — the most we are willing to hold on the
-# driver and ship inside a plan literal.
+# 2^26 bits = 8 MiB of longs — the most we are willing to ship in one
+# broadcast row.
 _MAX_BITS = 1 << 26
 
 
@@ -65,77 +64,18 @@ def _positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
     ]
 
 
-def build_bloom(
-    df: DataFrame, key_col: str, n_bits: int, n_hashes: int = 3
-) -> list[int]:
-    """Aggregate the build side's keys into a bitmap; return it as a
-    Python list of ``n_bits/64`` signed longs (the broadcastable
-    runtime-filter payload).
-
-    Plan: one projection (positions), one explode, one groupBy over at
-    most ``n_bits/64`` word indexes (map-side combined BIT_OR — the
-    shuffle moves O(partitions × words), regardless of build rows).
-    The driver materializes only the word list.
-    """
-    if n_bits % 64 != 0 or not 64 <= n_bits <= _MAX_BITS:
-        raise ValueError(
-            f"n_bits={n_bits} must be a multiple of 64 in [64, {_MAX_BITS}]"
-        )
-    if not 1 <= n_hashes <= 16:
-        raise ValueError(f"n_hashes={n_hashes} outside [1, 16]")
-    n_words = n_bits // 64
-    pos = F.explode(
-        F.array(*_positions(F.col(key_col), n_bits, n_hashes))
-    ).alias("__pos")
-    words = (
-        df.select(pos)
-        .select(
-            (F.col("__pos") / 64).cast("int").alias("__w"),
-            F.pmod(F.col("__pos"), F.lit(64)).cast("int").alias("__b"),
-        )
-        .groupBy("__w")
-        .agg(
-            F.expr(
-                "bit_or(shiftleft(cast(1 as bigint), __b))"
-            ).alias("__word")
-        )
-        .collect()
-    )
-    bitmap = [0] * n_words
-    for r in words:
-        bitmap[r["__w"]] = r["__word"]
-    return bitmap
-
-
-def might_contain(
-    bitmap: list[int], key: Column, n_hashes: int = 3
-) -> Column:
-    """Membership-test column: true iff every probe bit is set.
-
-    Pure expression over an array literal — evaluates inside
-    whole-stage codegen on the scan, so a false bloom test prunes the
-    row before any shuffle (and, under parquet, after pushdown-surviving
-    decode only)."""
-    n_bits = len(bitmap) * 64
-    arr = F.lit(bitmap)
-    test = F.lit(True)
-    for p in _positions(key, n_bits, n_hashes):
-        word = F.element_at(arr, (p / 64).cast("int") + F.lit(1))
-        # getbit, not shiftright: pyspark's shiftright only accepts a
-        # Python-int shift amount, the bit position here is a Column
-        bit = F.getbit(word, F.pmod(p, F.lit(64)).cast("int"))
-        test = test & (bit == 1)
-    return test
-
-
 def build_bloom_df(
     df: DataFrame, key_col: str, n_bits: int, n_hashes: int = 3
 ) -> DataFrame:
     """Bloom bitmap as a ONE-ROW DataFrame with a dense
-    ``array<bigint>`` column ``__bloom`` — the broadcast-data form of
-    :func:`build_bloom`.
+    ``array<bigint>`` column ``__bloom`` — the broadcastable
+    runtime-filter payload.
 
-    Why this exists: embedding the bitmap as a plan LITERAL
+    Plan: one projection (positions), one explode, one groupBy over at
+    most ``n_bits/64`` word indexes (map-side combined BIT_OR — the
+    shuffle moves O(partitions × words), regardless of build rows).
+
+    Why broadcast data: embedding the bitmap as a plan LITERAL
     (``F.lit(words)``) folds the whole filter into generated code,
     and codegen cost grows with the literal — measured 6× wall-time
     growth at 10× build keys (a ~22K-element constant array compiled
@@ -149,6 +89,8 @@ def build_bloom_df(
         raise ValueError(
             f"n_bits={n_bits} must be a multiple of 64 in [64, {_MAX_BITS}]"
         )
+    if not 1 <= n_hashes <= 16:
+        raise ValueError(f"n_hashes={n_hashes} outside [1, 16]")
     n_words = n_bits // 64
     pos = F.explode(
         F.array(*_positions(F.col(key_col), n_bits, n_hashes))
@@ -188,11 +130,15 @@ def build_bloom_df(
 def might_contain_col(
     bloom_col: Column, key: Column, n_bits: int, n_hashes: int = 3
 ) -> Column:
-    """Membership test against a bitmap COLUMN (see
-    :func:`build_bloom_df`); same bit math as :func:`might_contain`."""
+    """Membership-test column against a bitmap COLUMN (see
+    :func:`build_bloom_df`): true iff every probe bit is set. A pure
+    expression, so a false test prunes the row on the scan, before any
+    shuffle."""
     test = F.lit(True)
     for p in _positions(key, n_bits, n_hashes):
         word = F.element_at(bloom_col, (p / 64).cast("int") + F.lit(1))
+        # getbit, not shiftright: pyspark's shiftright only accepts a
+        # Python-int shift amount, the bit position here is a Column
         bit = F.getbit(word, F.pmod(p, F.lit(64)).cast("int"))
         test = test & (bit == 1)
     return test

@@ -353,27 +353,6 @@ def _signatures_from_sets(sets: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """LSH banding over MinHash signatures → candidate duplicate pairs.
-
-    ``bands`` bands of ``num_hashes/bands`` rows; a pair is a candidate
-    if any band hash collides. Plan: posexplode the banded signature →
-    groupBy (band, band_hash) bucket join — the shuffle is on band
-    buckets, never all-pairs. Candidates then get an exact Jaccard
-    re-check in :func:`minhash_dedup_pairs` (classic LSH verify step).
-    """
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    return _banded_candidates(sigs, bands, rows_per_band)
-
-
 def _band_keys(
     sigs: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -449,50 +428,22 @@ def minhash_dedup_pairs(
     return verified
 
 
-def simhash(text_col: str, num_bits: int = 64) -> Column:
-    """64-bit SimHash of a text column (by name), as a bigint.
-
-    Per token: xxhash64 → for each bit, +1/-1 vote; sign of the summed
-    vote per bit becomes the output bit. One pass over the token array
-    via SQL higher-order functions (the SQL forms of shiftright/
-    shiftleft accept expression bit-counts, unlike the Python wrappers).
-    """
-    n = num_bits
-    sql = f"""
-    aggregate(
-      zip_with(
-        aggregate(
-          transform(split(lower(trim({text_col})), '\\\\s+'), t -> xxhash64(t)),
-          array_repeat(0L, {n}),
-          (acc, h) -> zip_with(
-            acc, sequence(0, {n - 1}),
-            (a, i) -> a + IF((shiftright(h, i) & 1L) = 1L, 1L, -1L))
-        ),
-        sequence(0, {n - 1}),
-        (v, i) -> IF(v > 0, shiftleft(1L, i), 0L)
-      ),
-      0L,
-      (acc, x) -> acc | x
-    )
-    """
-    return F.expr(sql)
-
-
 def simhash_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_bits: int = 64,
 ) -> DataFrame:
-    """(id, sh) — SimHash per document, computed in codegen.
+    """(id, sh) — 64-bit SimHash per document as a bigint, computed in
+    codegen.
 
-    Same function as :func:`simhash` (identical token hashing and vote
-    rule, so the two agree bit-for-bit) but shaped for throughput:
-    explode tokens → ``groupBy(id)`` with one ``sum((h>>i)&1)`` per bit
-    plus a count. Flat aggregates compile and combine map-side; the
-    per-row higher-order expression is interpreted and serializes on
-    large documents. Bit i of the result is set iff set-votes outnumber
-    unset-votes (2·c_i > n).
+    Per token (lower-cased, trimmed, whitespace-split): xxhash64, and a
+    +1/-1 vote per bit; bit i of the result is set iff set-votes
+    outnumber unset-votes (2·c_i > n). Shaped for throughput: explode
+    tokens → ``groupBy(id)`` with one ``sum((h>>i)&1)`` per bit plus a
+    count. Flat aggregates compile and combine map-side, where a per-row
+    higher-order vote expression is interpreted and serializes on large
+    documents.
     """
     ex = (
         _spread(df, id_col)

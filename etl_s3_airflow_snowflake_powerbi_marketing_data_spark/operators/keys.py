@@ -4,19 +4,11 @@ The reference assigns 1-based contiguous integers in dataframe order via
 ``df.assign(guid=range(1, len(df)+1))`` — trivially exact on one pandas
 process, a global-ordering problem on a cluster.
 
-Two implementations:
-
-- ``with_surrogate_key``: exact semantics — ``row_number()`` over an
-  explicit total ordering. Spark plans this as a *single-partition*
-  window, which is correct but serializes the numbering stage; fine for
-  dimension tables (small by construction), wrong for a 100 TB fact.
-- ``zip_with_index``: scale path — two-pass offset assignment. Pass 1
-  computes per-partition row counts (a tiny driver-side array, not the
-  data); pass 2 numbers rows within each partition and adds the
-  partition's cumulative offset. No global shuffle, no single-partition
-  window; the ordering guarantee is "contiguous and unique, ordered by
-  (sorted) partition then intra-partition order", which matches the
-  reference's "dataframe order" when the input was just sorted.
+One implementation, :func:`ordered_surrogate_key`: an exact global
+``row_number()`` over an explicit ordering, computed per order-contiguous
+bucket plus a cumulative bucket offset, so no stage runs as a
+single-partition window (Spark's plan for a bare ``row_number()`` over a
+total order — correct, but it serializes the numbering of a 100 TB fact).
 
 Reference: `etl_s3_snowflake_raw_event_ingest.py:32`,
 `etl_s3_snowflake_d_event.py:30`, `etl_s3_snowflake_f_events.py:43`.
@@ -29,24 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def with_surrogate_key(
-    df: DataFrame,
-    name: str,
-    order_by: Sequence[Column | str],
-    as_string: bool = False,
-) -> DataFrame:
-    """Exact 1-based contiguous key over a total ordering.
-
-    Use for dimension tables only — the final window is single-partition
-    by construction (that's what a total order costs). The reference
-    stores guids as VARCHAR (`etl_s3_snowflake_d_event.py:40`);
-    ``as_string=True`` reproduces that.
-    """
-    w = Window.orderBy(*order_by)
-    key = F.row_number().over(w)
-    return df.withColumn(name, key.cast("string") if as_string else key.cast("long"))
 
 
 def _order_proxy(df: DataFrame, key: str) -> Column:
@@ -83,7 +57,6 @@ def ordered_surrogate_key(
     descending: bool = False,
     start: int = 1,
     num_buckets: int | None = None,
-    as_string: bool = False,
 ) -> DataFrame:
     """Exact global ``row_number()`` over ``order_by`` WITHOUT a
     single-partition window — the 100 TB path for P7
@@ -152,7 +125,7 @@ def ordered_surrogate_key(
         F.col(c) for c in order_by[1:]
     ]
     w_local = Window.partitionBy("__bucket").orderBy(*sort_cols)
-    out = (
+    return (
         bucketed.join(F.broadcast(offsets), "__bucket")
         .withColumn(
             name,
@@ -162,44 +135,4 @@ def ordered_surrogate_key(
         )
         .drop("__bucket", "__off")
     )
-    if as_string:
-        out = out.withColumn(name, F.col(name).cast("string"))
-    return out
 
-
-def zip_with_index(
-    df: DataFrame,
-    name: str,
-    start: int = 1,
-) -> DataFrame:
-    """Contiguous unique ids without a global sort — the 100 TB path.
-
-    Two passes over the data, one tiny collect of per-partition counts
-    (O(#partitions) longs to the driver, never rows). Equivalent to
-    ``rdd.zipWithIndex`` but stays in the DataFrame/Arrow world.
-    """
-    pid_col = "__pid"
-    with_pid = df.withColumn(pid_col, F.spark_partition_id())
-    # Pass 1: count rows per partition (cheap agg; AQE coalesces).
-    counts = {
-        row[pid_col]: row["cnt"]
-        for row in with_pid.groupBy(pid_col).agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    running = start
-    for pid in sorted(counts):
-        offsets[pid] = running
-        running += counts[pid]
-    offset_expr = F.create_map(
-        *[item for pid, off in offsets.items() for item in (F.lit(pid), F.lit(off))]
-    )
-    # Pass 2: intra-partition row_number (no shuffle — window partitioned
-    # by the physical partition id) + broadcasted offset lookup.
-    w = Window.partitionBy(pid_col).orderBy(F.monotonically_increasing_id())
-    return (
-        with_pid.withColumn(
-            name,
-            (F.row_number().over(w) - 1 + offset_expr[F.col(pid_col)]).cast("long"),
-        )
-        .drop(pid_col)
-    )

@@ -16,9 +16,9 @@ Catalyst executes as one shuffle on the merge keys for both legs (or a
 broadcast when the delta side is small — the common daily-load case at
 scale: broadcast the day's delta against the 100 TB target, zero shuffle
 of the big side). Without a transactional table format the caller owns
-atomicity of the rewrite; ``merge_write`` documents the honest fallback
-(full overwrite to a staging path then swap). If delta-spark is on the
-classpath, ``delta_merge`` uses real ``MERGE INTO``.
+atomicity of the rewrite: the warehouse writes each result to a
+staging path and swaps it in (``plans.pipeline._swap_write``), or
+commits it as a version (:func:`versioned_merge`).
 """
 
 from __future__ import annotations
@@ -146,45 +146,6 @@ def merge_keep_guid(
     return kept_old.unionByName(matched).unionByName(new_rows)
 
 
-def merge_write(
-    result: DataFrame, path: str, partition_by: Sequence[str] | None = None
-) -> None:
-    """Persist a merge result.
-
-    Plain-parquet fallback: full rewrite. At scale, partition the target
-    by a stable key (e.g. date) and rewrite only partitions present in
-    the delta (``spark.sql.sources.partitionOverwriteMode=dynamic``);
-    with Delta/Iceberg on the classpath use ``delta_merge`` instead for a
-    transactional row-level MERGE.
-    """
-    writer = result.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def delta_merge(
-    spark,
-    target_path: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    update: bool,
-) -> bool:
-    """Transactional MERGE via delta-spark, if available. Returns False
-    when the Delta classpath is absent (plain-parquet envs)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: PLC0415
-    except ImportError:
-        return False
-    tgt = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    builder = tgt.alias("t").merge(source.alias("s"), cond)
-    if update:
-        builder = builder.whenMatchedUpdateAll()
-    builder.whenNotMatchedInsertAll().execute()
-    return True
-
-
 def merge_scd2(
     target: DataFrame,
     source: DataFrame,
@@ -294,14 +255,11 @@ def versioned_merge(
     join-based merge, commit the result as a new atomic version.
     Returns the committed version.
 
-    Same call contract as :func:`delta_merge`; the difference is the
-    isolation story — here a concurrent reader keeps its resolved
-    snapshot (manifests are immutable) and a concurrent writer loses
-    the O_EXCL commit race and retries, so the merge is atomic and
-    isolated even on plain parquet. The data cost is the same full
-    rewrite ``merge_write`` documents — the version layer adds
-    atomicity, not row-level deltas; partition the table and merge
-    per-partition when the delta is small.
+    A concurrent reader keeps its resolved snapshot (manifests are
+    immutable) and a concurrent writer loses the O_EXCL commit race and
+    retries, so the merge is atomic and isolated even on plain parquet.
+    An update merge rewrites the whole table, as the staging-swap does —
+    the version layer adds atomicity, not row-level deltas.
     """
     from ..sources import versioned as vt  # noqa: PLC0415
 

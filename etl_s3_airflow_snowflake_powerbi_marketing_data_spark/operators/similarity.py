@@ -110,60 +110,6 @@ def _hyperplane(seed: int, dim: int) -> list[float]:
     return out
 
 
-def signed_projection_signature(
-    vec_col: str, planes: list[list[float]]
-) -> Column:
-    """b-bit signature: bit i = sign(vec · plane_i). Returns bigint.
-
-    All planes ride in ONE flat array literal (``F.lit`` of the
-    row-major plane matrix — a single py4j transfer of exact IEEE
-    doubles, no string round-trip, no SQL parse) and the per-plane loop
-    is a higher-order ``transform`` over plane indices with ``slice``
-    picking each plane's window. The earlier forms paid a fixed
-    per-query cost that grew with ``bits``: per-plane Column
-    composition was ~2 s of py4j round-trips at 16 planes, and a
-    generated ~90 KB SQL string at 48 planes cost ~3.5 s of
-    parse+analyze+codegen on first execution (measured — dominated the
-    whole query). This form keeps the expression tree O(1) in ``bits``.
-
-    Float semantics are unchanged: bit i = sign of the zip_with
-    product folded sequentially from 0.0 — bit-identical to the
-    pure-Python oracle's sequential sums."""
-    dim = len(planes[0])
-    # D-suffixed SQL double literals, one expr: ~8 ms for 3072 planes
-    # values vs ~1.6 s for F.lit(list) (py4j converts list elements one
-    # JVM call each). repr → SQL double parse is shortest-round-trip
-    # exact (verified incl. exponent notation, -0.0, denormals).
-    plane_mat = F.expr(
-        "array("
-        + ",".join(f"{float(v)!r}D" for plane in planes for v in plane)
-        + ")"
-    )
-    dot = lambda p: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col(vec_col),
-            F.slice(plane_mat, p * F.lit(dim) + 1, dim),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(len(planes) - 1)),
-        lambda p: F.when(
-            dot(p) > 0,
-            # call_function: F.shiftleft only takes a literal int for
-            # numBits, but the shift amount here is the lambda variable.
-            F.call_function(
-                "shiftleft", F.lit(1).cast("long"), p.cast("int")
-            ),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(
-        bits, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x)
-    )
-
-
 def _probe_masks(bits_per_band: int, probe_hamming: int) -> list[int]:
     """Every XOR mask of Hamming weight ≤ ``probe_hamming`` over a
     ``bits_per_band``-bit band value — the multi-probe bucket ball."""
@@ -189,23 +135,23 @@ def banded_signature_rows(
     role: str,
 ) -> DataFrame:
     """Exploded (role_id, role_vec, band, band_bits) rows — band j's
-    bit i = sign(vec · plane[j·b + i]), the
-    :func:`signed_projection_signature` bit order over plane slice
-    [j·b, (j+1)·b) — computed in Arrow batches.
+    bit i = sign(vec · plane[j·b + i]) over plane slice [j·b, (j+1)·b)
+    — computed in Arrow batches.
 
-    Why not the expression form: a 920-plane signature embeds a
-    58,880-double array literal whose analysis cost the driver pays on
+    Why not a Spark expression: a 920-plane signature as a
+    ``zip_with``/``aggregate`` expression embeds a 58,880-double array
+    literal whose analysis cost the driver pays on
     EVERY plan build (measured 16-21 s per query — the analyzer walks
     the literal's children across fixpoint passes). Here the plane
     matrix rides the UDF closure instead, and the batch math
     accumulates the dot products with a dim-ordered loop of
     elementwise adds — ``acc += x_d · y_d`` for d = 0..dim-1 — which
-    is BIT-IDENTICAL to the sequential fold the expression form and
-    the pure-Python oracle replica (tools/gen_expected.py:seq_dot)
-    evaluate: per (row, plane) the additions happen in the same order
-    with no reassociation, independent of Arrow batch size (a single
-    BLAS matmul would NOT guarantee that — gemm blocking reorders
-    sums by shape). Verified by the unchanged expected-file oracle.
+    is BIT-IDENTICAL to the sequential fold the pure-Python oracle
+    replica (tools/gen_expected.py:seq_dot) evaluates: per (row,
+    plane) the additions happen in the same order with no
+    reassociation, independent of Arrow batch size (a single BLAS
+    matmul would NOT guarantee that — gemm blocking reorders sums by
+    shape). Verified by the unchanged expected-file oracle.
     """
     import numpy as np  # noqa: PLC0415
 
@@ -224,7 +170,7 @@ def banded_signature_rows(
             if len(pdf) == 0:
                 continue
             # Rows whose length differs from the plane dim keep an
-            # all-zero signature — the expression form's semantics
+            # all-zero signature — a zip_with fold's semantics
             # (zip_with pads the shorter side with nulls, the fold
             # propagates null, null > 0 is false for every bit), which
             # the exact verify downstream then resolves. Identical-
@@ -460,16 +406,6 @@ def _centroid_literal(rows: list[tuple[int, list[float]]]):
     return F.expr("array(" + ",".join(parts) + ")")
 
 
-def _ranked_cells(vec: Column, centroid_lit):
-    """array<struct<nsim,cell>> sorted nearest-first for ``vec``.
-    Negating the similarity inside the sort struct yields (sim DESC,
-    cell ASC) under the default ascending struct order — a
-    deterministic tie-break. Callers read cell AND similarity from one
-    struct so the n_cells-cosine scan is evaluated once, not per
-    consumed field."""
-    return F.array_sort(_cell_structs(vec, centroid_lit))
-
-
 def _cell_structs(vec: Column, centroid_lit):
     return F.transform(
         centroid_lit,
@@ -674,9 +610,9 @@ def kmeans_clusters(
     assign_arrays = _cell_assign_arrays(cent)
     id_type = df.schema[id_col].dataType.simpleString()
 
-    # Final assignment via the shared numpy kernel (r12; was the
-    # interpreted _ranked_cells expression — see _nearest_cells_np for
-    # the bit-identity argument). trunc6 is replayed as floor(x·1e6)/
+    # Final assignment via the shared numpy kernel (see
+    # _nearest_cells_np for the bit-identity argument with the
+    # expression form). trunc6 is replayed as floor(x·1e6)/
     # 1e6 + 0.0 — floor of an integral-valued double divides to the
     # same double, and + 0.0 canonicalizes numpy's -0.0 the way SQL
     # floor-through-LONG never produces one.
@@ -807,34 +743,6 @@ def cosine_dup_pairs(
     )
 
 
-def _cosine_pandas(vec_a: Column, vec_b: Column) -> Column:
-    """Arrow-vectorized cosine for APPROXIMATE paths (LSH/IVF verify).
-
-    numpy does the 64-dim dot products in one matrix op per batch —
-    orders of magnitude faster than the interpreted higher-order
-    expression on millions of candidate pairs. Not used on
-    oracle-checked exact paths: numpy's pairwise summation rounds
-    differently than the sequential-sum oracle formula, which matters
-    at the floor-truncation boundary.
-    """
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: PLC0415
-
-        mat_a = np.vstack(a.to_numpy()).astype(np.float64)
-        mat_b = np.vstack(b.to_numpy()).astype(np.float64)
-        num = (mat_a * mat_b).sum(axis=1)
-        den = np.sqrt((mat_a * mat_a).sum(axis=1)) * np.sqrt(
-            (mat_b * mat_b).sum(axis=1)
-        )
-        sim = num / den
-        return pd.Series(np.floor(sim * 1e6) / 1e6)
-
-    return _cos(vec_a, vec_b)
-
-
 def cosine_dup_pairs_lsh(
     df: DataFrame,
     threshold: float = 0.4,
@@ -877,9 +785,9 @@ def cosine_dup_pairs_lsh(
     compute.
 
     The verify math is row-wise products + axis-1 sums + floor-trunc —
-    float-identical to :func:`_cosine_pandas` and to the independent
-    generator (tools/gen_expected.py), so the pair set and sims are
-    unchanged from the join-based form.
+    float-identical to the independent generator
+    (tools/gen_expected.py), so the pair set and sims are unchanged
+    from the join-based form.
     """
     planes = [_hyperplane(s, dim) for s in range(bits)]
     bits_per_band = bits // bands

@@ -12,9 +12,11 @@ one is a narrow, Catalyst-visible DataFrame expression:
   pandas load order) by ranking within key on an explicit ordering —
   a single hash shuffle on the key, map-side-combinable at scale.
 
-Reference citations: rename `etl_s3_snowflake_raw_event_ingest.py:28`,
-json parse `:30`, flatten `etl_s3_snowflake_f_events.py:30`, dedup
-`etl_s3_snowflake_d_event.py:26`, sort `etl_s3_snowflake_f_events.py:36`.
+Reference citations: json parse `etl_s3_snowflake_raw_event_ingest.py:30`,
+flatten `etl_s3_snowflake_f_events.py:30`, dedup
+`etl_s3_snowflake_d_event.py:26`. The rename (`…_raw_event_ingest.py:28`)
+is ``readers.read_csv_inferred``'s ``rename``; projections, drops and
+sorts are plain ``select``/``drop``/``orderBy`` at their call sites.
 """
 
 from __future__ import annotations
@@ -59,11 +61,6 @@ def normalize_id_to_long(col: Column | str, dtype: str = "string") -> Column:
     return c.cast("long")
 
 
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """P1 — bulk column rename (e.g. ``event.payload`` → ``event_payload``)."""
-    return df.withColumnsRenamed(mapping)
-
-
 def parse_json_column(
     df: DataFrame, column: str, schema: T.StructType, parsed_name: str | None = None
 ) -> DataFrame:
@@ -103,22 +100,6 @@ def variant_field(col: Column | str, path: str, dtype: str) -> Column:
     return F.variant_get(c, path, dtype)
 
 
-def flatten_struct(df: DataFrame, column: str, drop_struct: bool = True) -> DataFrame:
-    """P3 — one output column per struct field (``pd.json_normalize`` analog)."""
-    out = df.select("*", f"{column}.*")
-    return out.drop(column) if drop_struct else out
-
-
-def project(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P4 — keep a column subset. Catalyst prunes the parquet scan to match."""
-    return df.select(*columns)
-
-
-def drop_columns(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P5 — drop columns."""
-    return df.drop(*columns)
-
-
 def dedup_keep_first(
     df: DataFrame,
     keys: Sequence[str],
@@ -139,11 +120,6 @@ def dedup_keep_first(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def sort_desc(df: DataFrame, column: str) -> DataFrame:
-    """P9 — global descending sort (range-partitioned exchange at scale)."""
-    return df.orderBy(F.col(column).desc())
 
 
 def parse_raw_event_time(col: Column | str) -> Column:

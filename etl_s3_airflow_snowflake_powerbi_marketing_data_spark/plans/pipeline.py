@@ -19,8 +19,9 @@ table.
 MERGE targets persist as parquet directories under ``warehouse_dir``.
 Each merge is write-to-staging-then-swap (the honest plain-parquet
 atomicity fallback — reads of the old target feed the merge plan, so
-in-place overwrite would corrupt; Delta/Iceberg replace the swap with a
-transactional commit, see ``operators.merge.delta_merge``).
+in-place overwrite would corrupt; a warehouse bootstrapped with
+``versioned=True`` commits each write as a ``sources.versioned``
+version instead).
 
 Reference semantics preserved (SURVEY.md §2.1 S6/S7) with one
 deliberate, documented fix: the reference numbers each day's delta from
@@ -46,7 +47,7 @@ import os
 import shutil
 from functools import partial
 
-from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_ignore, merge_keep_guid, merge_update
@@ -72,22 +73,17 @@ WAREHOUSE_PARQUET_OPTIONS = {
 }
 
 
-def _write_warehouse_parquet(writer: DataFrameWriter, path: str) -> None:
-    """The one parquet write of warehouse table files: ``writer`` carries
-    the caller's mode/partitioning, this adds the storage options."""
-    writer.options(**WAREHOUSE_PARQUET_OPTIONS).parquet(path)
-
-
 def _swap_write(result: DataFrame, path: str) -> None:
     """Write a plain-warehouse table: materialize to a staging dir as
     zstd, v2-page parquet (:data:`WAREHOUSE_PARQUET_OPTIONS`), then
     atomically-ish swap it in. Local-FS rename; on HDFS/S3 this is the
     FileSystem rename / committer step, and with a table format it
-    disappears entirely. Every stage table, the ``kpi_*`` views and the
-    daily rollup land through here, and the whole table is rewritten on
-    each call."""
+    disappears entirely. Every stage table and the ``kpi_*`` views land
+    through here, and the whole table is rewritten on each call."""
     staging = path + "__staging"
-    _write_warehouse_parquet(result.write.mode("overwrite"), staging)
+    result.write.mode("overwrite").options(
+        **WAREHOUSE_PARQUET_OPTIONS
+    ).parquet(staging)
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(staging, path)
@@ -480,108 +476,6 @@ def run_daily_pipeline(
         name: _read_tbl(spark, _table_dir(warehouse_dir, name)).count()
         for name in WAREHOUSE_TABLES
     }
-
-
-# ---------------------------------------------------------------------------
-# Partitioned incremental fact + continuous aggregate (the 100 TB shape)
-# ---------------------------------------------------------------------------
-
-FACT_PARTITION_COL = "event_date"
-
-
-def merge_fact_partitioned(
-    spark: SparkSession, warehouse_dir: str, fresh: DataFrame
-) -> str:
-    """Date-partitioned fact merge: rewrite ONLY the partitions the
-    day's delta touches.
-
-    The swap-based merge above rewrites the whole fact every day —
-    honest but O(warehouse) daily I/O. At 100 TB the correct shape is:
-
-    1. partition the fact by ``event_date`` (derived once from the
-       immutable event_time);
-    2. read back only the affected partitions (partition pruning — the
-       unaffected 99.9% of the warehouse is never opened);
-    3. merge the delta against just those rows;
-    4. write with dynamic partition overwrite, which replaces exactly
-       the affected date directories and leaves the rest untouched.
-
-    Requires the partition column to be STABLE under updates (an update
-    may change attributes, never event_date) — otherwise the old row in
-    the old partition would survive as a duplicate. event_date derives
-    from event_time, which is part of the event's identity here.
-    """
-    path = _table_dir(warehouse_dir, "f_events_partitioned")
-    delta = fresh.withColumn(
-        FACT_PARTITION_COL, F.to_date(F.col("event_time"))
-    )
-    if not os.path.exists(path):
-        _write_warehouse_parquet(
-            delta.write.partitionBy(FACT_PARTITION_COL), path
-        )
-        return path
-
-    affected = [
-        r[FACT_PARTITION_COL]
-        for r in delta.select(FACT_PARTITION_COL).distinct().collect()
-    ]
-    target = spark.read.parquet(path).filter(
-        F.col(FACT_PARTITION_COL).isin(affected)
-    )
-    guid_max = (
-        spark.read.parquet(path).agg(F.max("guid_event")).first()[0] or 0
-    )
-    merged = merge_keep_guid(
-        target, delta, FACT_KEYS, "guid_event", ("event_id",), guid_max + 1,
-        update=True,
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        _write_warehouse_parquet(
-            merged.write.mode("overwrite").partitionBy(FACT_PARTITION_COL),
-            path,
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return path
-
-
-def update_daily_rollup(
-    spark: SparkSession, warehouse_dir: str, fact_path: str, delta: DataFrame
-) -> str:
-    """Continuous aggregate: a persisted (period × event_name) rollup
-    maintained incrementally — recompute ONLY the periods the delta
-    touches from the merged fact, then upsert them into the rollup
-    table. The daily cost is O(affected periods), not O(history);
-    at 100 TB this is the difference between a rollup refresh that
-    reads one day and one that rescans years.
-    """
-    rollup_path = _table_dir(warehouse_dir, "agg_daily_events")
-    affected = [
-        r["d"]
-        for r in delta.select(
-            F.to_date(F.col("event_time")).alias("d")
-        ).distinct().collect()
-    ]
-    fact = spark.read.parquet(fact_path)
-    recomputed = (
-        fact.filter(F.col(FACT_PARTITION_COL).isin(affected))
-        .groupBy(
-            F.col(FACT_PARTITION_COL).alias("period"), F.col("event_name")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("event_value"), 2).alias("total_value"),
-        )
-    )
-    if not os.path.exists(rollup_path):
-        _swap_write(recomputed, rollup_path)
-        return rollup_path
-    target = spark.read.parquet(rollup_path)
-    merged = merge_update(target, recomputed, ["period", "event_name"])
-    _swap_write(merged, rollup_path)
-    return rollup_path
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -18,6 +18,17 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# glibc mmap and trim thresholds for every Spark process (see get_spark).
+# 256 MiB sits above the largest numpy temporary of one Arrow batch
+# (about 65 MB), so those stay on the reusable heap, and it bounds what
+# a worker may keep: 256 MiB per Python worker, 2 GiB of executor
+# memory overhead at 8 cores. jemalloc or tcmalloc would give the same
+# effect in a deployment that preloads one.
+_MALLOC_ENV = {
+    "MALLOC_MMAP_THRESHOLD_": str(256 * 1024 * 1024),
+    "MALLOC_TRIM_THRESHOLD_": str(256 * 1024 * 1024),
+}
+
 _WAREHOUSE_DIR: str | None = None
 
 
@@ -84,16 +95,7 @@ def get_spark(
     # os.environ (inherited by the launched JVM → python daemon →
     # workers — glibc reads it at process start) AND as executorEnv
     # for the cluster posture where executors aren't our children.
-    # Parameterized; production sizing note in OPTIMIZATION_r12.md.
-    malloc_env = {
-        "MALLOC_MMAP_THRESHOLD_": os.environ.get(
-            "SPARK_GRAFT_MALLOC_MMAP_THRESHOLD", str(256 * 1024 * 1024)
-        ),
-        "MALLOC_TRIM_THRESHOLD_": os.environ.get(
-            "SPARK_GRAFT_MALLOC_TRIM_THRESHOLD", str(256 * 1024 * 1024)
-        ),
-    }
-    os.environ.update(malloc_env)
+    os.environ.update(_MALLOC_ENV)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -148,11 +150,11 @@ def get_spark(
         .config("spark.sql.warehouse.dir", _process_warehouse_dir())
         .config(
             "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
-            malloc_env["MALLOC_MMAP_THRESHOLD_"],
+            _MALLOC_ENV["MALLOC_MMAP_THRESHOLD_"],
         )
         .config(
             "spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
-            malloc_env["MALLOC_TRIM_THRESHOLD_"],
+            _MALLOC_ENV["MALLOC_TRIM_THRESHOLD_"],
         )
     )
     for key, value in (extra_conf or {}).items():

@@ -41,21 +41,6 @@ def read_csv_inferred(
     return df
 
 
-def read_csv_typed(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Curated CSV read: explicit schema, no inference pass, malformed
-    rows fail fast (``FAILFAST`` — silent null-filling hides upstream
-    contract breaks at scale)."""
-    return (
-        spark.read.option("header", True)
-        .option("mode", "FAILFAST")
-        .option("escape", '"')  # RFC-4180 doubled quotes (see above)
-        .schema(schema)
-        .csv(path)
-    )
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Columnar scan with predicate pushdown + column pruning (the
     default at-rest format for every curated table)."""

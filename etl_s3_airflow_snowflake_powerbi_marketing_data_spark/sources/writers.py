@@ -1,10 +1,11 @@
-"""Sinks (reference ops S3/S4/S5/S8, SURVEY.md §2.1).
+"""Sinks (reference ops S3/S4/S5, SURVEY.md §2.1).
 
 The reference materializes every intermediate to a warehouse table; in
 Spark only *named outputs* materialize — intermediates stay lazy plan
-nodes (the laziness IS the pipeline fusion). Writers here cover the
-named-output cases: full replace, anonymous staging (temp view), and
-partitioned curated output for partition-pruned downstream reads.
+nodes (the laziness IS the pipeline fusion), so the reference's staging
+temp tables and their cleanup (S4/S8) have no counterpart. Writers here
+cover the named-output cases: full replace, declared-schema DDL, and
+partitioned or clustered curated output for pruned downstream reads.
 """
 
 from __future__ import annotations
@@ -28,20 +29,6 @@ def write_partitioned(
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
 
 
-def stage_temp_view(df: DataFrame, name: str) -> None:
-    """S4 — anonymous/named staging without materialization
-    (`etl_s3_snowflake_d_event.py:64-66` writes a real temp table; a
-    Spark temp view is the zero-copy equivalent)."""
-    df.createOrReplaceTempView(name)
-
-
-def drop_temp_views(spark: SparkSession, names: Sequence[str]) -> None:
-    """S8 — cleanup (`aql.cleanup()`); temp views are session-scoped so
-    this is bookkeeping, not storage reclamation."""
-    for name in names:
-        spark.catalog.dropTempView(name)
-
-
 def create_table_ddl(
     spark: SparkSession,
     name: str,
@@ -61,14 +48,6 @@ def create_table_ddl(
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE TABLE {name} ({schema_ddl}) USING parquet{loc}")
-
-
-def write_managed_replace(df: DataFrame, name: str) -> None:
-    """S3/S5 — full replace of a MANAGED catalog table: schema and data
-    both live behind the table name (``INSERT OVERWRITE`` semantics of
-    the reference's full-replace loads, but catalog-addressed instead
-    of path-addressed)."""
-    df.write.mode("overwrite").format("parquet").saveAsTable(name)
 
 
 def write_bucketed(
@@ -111,63 +90,6 @@ def write_jsonl_replace(df: DataFrame, path: str) -> None:
     :func:`readers.read_json` and an EXPLICIT schema (inference over
     JSONL at 100 TB costs a full extra pass)."""
     df.write.mode("overwrite").json(path)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    max_records_per_file: int = 100_000,
-    shuffle_col: str | None = None,
-) -> dict:
-    """Export a prepared corpus as size-bounded parquet shards plus a
-    ``manifest.json`` — the handoff format an LLM dataloader consumes
-    (the WebDataset posture: fixed-size shards a loader can assign to
-    workers without listing or footer-reading the whole dataset).
-
-    ``maxRecordsPerFile`` bounds every shard; with ``shuffle_col`` the
-    rows are range-partitioned on it first (pass a deterministic
-    position — e.g. ``sampling.corpus_shuffle``'s output — so shard
-    membership is reproducible across runs; never ``rand()``). The
-    manifest records per-shard row counts read from the parquet
-    FOOTERS (metadata-only, no data scan) and the schema, so a loader
-    can size epochs and split work without opening a single shard.
-
-    Returns the manifest dict (also written to ``path/_manifest.json``
-    — the underscore prefix keeps it invisible to Spark/Hadoop scans of
-    the shard directory, like ``_SUCCESS``).
-    """
-    import json as _json  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
-
-    writer = df
-    if shuffle_col is not None:
-        writer = df.repartitionByRange(shuffle_col).sortWithinPartitions(
-            shuffle_col
-        )
-    (
-        writer.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
-    )
-    import pyarrow.parquet as _pq  # noqa: PLC0415
-
-    shards = []
-    for name in sorted(_os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = _pq.ParquetFile(_os.path.join(path, name)).metadata
-        shards.append({"file": name, "rows": md.num_rows})
-    manifest = {
-        "format": "parquet",
-        "max_records_per_file": max_records_per_file,
-        "n_shards": len(shards),
-        "total_rows": sum(sh["rows"] for sh in shards),
-        "schema": df.schema.jsonValue(),
-        "shards": shards,
-    }
-    with open(_os.path.join(path, "_manifest.json"), "w") as fh:
-        _json.dump(manifest, fh, indent=1)
-    return manifest
 
 
 def write_sorted_replace(

@@ -421,44 +421,6 @@ def run_hll_stream_to_versioned(
     ).orderBy("event_type")
 
 
-def run_cms_stream_to_versioned(
-    spark: SparkSession,
-    source_path: str,
-    table_path: str,
-    depth: int = 4,
-    width: int = 2048,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """``run_cms_stream_to_memory`` with the COUNT registers landing in
-    the versioned table layer (one atomic version per micro-batch);
-    point queries answered from the LATEST committed register version.
-    COUNT registers are micro-batch-order invariant, so the final
-    version equals the memory-sink and batch registers bit-for-bit
-    (pinned in tests)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from ..operators.sketches import (  # noqa: PLC0415
-        cms_point_estimates,
-        cms_registers,
-    )
-
-    stream = read_event_stream(spark, source_path)
-    regs = cms_registers(stream, "user_id", depth=depth, width=width)
-    _run_register_stream_to_versioned(regs, table_path, checkpoint_dir)
-    watch = (
-        spark.read.parquet(source_path)
-        .select("user_id")
-        .filter(F.col("user_id") % 37 == 0)
-    )
-    return cms_point_estimates(
-        vt.read_version(spark, table_path),
-        watch,
-        "user_id",
-        depth=depth,
-        width=width,
-    ).orderBy("user_id")
-
-
 def streaming_enriched_brand_counts(
     events: DataFrame,
     items: DataFrame,
@@ -508,64 +470,6 @@ def run_enriched_stream_to_memory(
         state_partitions,
     )
     return spark.table(query_name)
-
-
-def run_streaming_warehouse_merge(
-    spark: SparkSession,
-    source_path: str,
-    target_dir: str,
-    keys: tuple[str, ...] = ("event_id",),
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Continuous ingest into the warehouse: every micro-batch MERGEs
-    (insert-if-absent on ``keys``) into the parquet fact directory via
-    ``foreachBatch`` — the Structured-Streaming sibling of the daily
-    batch pipeline's S6 merge, and the production shape for a feed that
-    never stops (the reference's "daily upserted S3 files",
-    ``README.md:20``, with the day collapsed to a micro-batch).
-
-    Exactly-once effect from at-least-once machinery: the file source +
-    checkpoint give at-least-once batch delivery, and the merge is
-    idempotent on ``keys`` (a replayed batch anti-joins to zero new
-    rows), so the composition is effectively-once — the same argument
-    the batch pipeline makes for re-running a day. Each batch rewrites
-    via staging-swap; with Delta on the classpath the swap becomes a
-    transactional MERGE (``operators.merge.delta_merge``).
-
-    Scale: the anti-join broadcasts the micro-batch side (a batch is
-    small next to the warehouse); the full-target rewrite is the honest
-    plain-parquet cost — at 100 TB the target is partitioned by day and
-    only touched partitions rewrite (``plans.pipeline.merge_fact_partitioned``).
-    Returns the final warehouse contents as a batch DataFrame.
-    """
-    import os  # noqa: PLC0415
-
-    from ..operators.merge import merge_ignore  # noqa: PLC0415
-
-    stream = read_event_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_merge_ckpt_")
-
-    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if os.path.exists(target_dir):
-            target = sess.read.parquet(target_dir)
-            merged = merge_ignore(target, batch.select(*target.columns), list(keys))
-        else:
-            merged = batch
-        staging = target_dir + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        import shutil  # noqa: PLC0415
-
-        if os.path.exists(target_dir):
-            shutil.rmtree(target_dir)
-        os.rename(staging, target_dir)
-
-    _drain(
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt),
-        spark,
-    )
-    return spark.read.parquet(target_dir)
 
 
 def streaming_view_purchase_attribution(
@@ -652,37 +556,6 @@ def run_attribution_stream_to_memory(
         state_partitions,
     )
     return spark.table(query_name)
-
-
-def run_streaming_versioned_merge(
-    spark: SparkSession,
-    source_path: str,
-    table_path: str,
-    keys: tuple[str, ...] = ("event_id",),
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """``run_streaming_warehouse_merge`` upgraded to the transactional
-    table layer (sources/versioned.py): each micro-batch commits one
-    atomic version instead of a staging-dir swap, so concurrent readers
-    keep their snapshot mid-commit, a crashed batch leaves an invisible
-    (uncommitted) prefix rather than a half-swapped directory, and the
-    per-batch history is auditable (one version per micro-batch —
-    time-travel to any ingest point). Replays stay effectively-once:
-    the merge is idempotent on ``keys``, so a re-delivered batch
-    commits a content-identical version. Returns the final snapshot.
-    """
-    stream = read_event_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_vmerge_ckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        append_if_absent(batch.sparkSession, table_path, batch, list(keys))
-
-    _drain(
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt),
-        spark,
-    )
-    return vt.read_version(spark, table_path)
 
 
 def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -1178,8 +1051,7 @@ def run_streaming_minhash_dedup(
     3. commit the per-doc decisions to a versioned table via
        insert-if-absent MERGE — a replayed batch re-commits a
        content-identical decision set, so the gate is
-       effectively-once (the ``run_streaming_versioned_merge``
-       contract);
+       effectively-once (the crash rule of ``_run_gate_stream``);
     4. append the SURVIVORS' signatures (never text — the ~0.5 KB/doc
        index posture) to the store the same way, so the next batch
        dedups against everything kept so far.

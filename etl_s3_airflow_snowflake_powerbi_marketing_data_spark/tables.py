@@ -1,15 +1,12 @@
-"""Test-table loading and catalog registration.
+"""Test-table loading.
 
-The driver's synthetic tables (see /root/repo/TESTDATA.md) are one
-parquet file per table under ``{sf_dir}/{name}.parquet``. Loading stays
-lazy — a registered view is just a logical plan over the parquet scan,
-so Catalyst still gets full predicate pushdown and column pruning per
-query.
+The synthetic test tables (see TESTDATA.md) are one parquet file per
+table under ``{sf_dir}/{name}.parquet``. Loading stays lazy — a
+loaded table is just a logical plan over the parquet scan, so Catalyst
+still gets full predicate pushdown and column pruning per query.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,12 +23,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -102,19 +93,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
-
-def register_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Register each parquet table as a temp view; returns the DataFrames.
-
-    Views are session-scoped logical plans (no materialization), mirroring
-    the reference's named staging tables (SURVEY.md §1.1, S2) without the
-    warehouse round-trips.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

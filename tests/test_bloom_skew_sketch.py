@@ -31,13 +31,23 @@ def _rows(df):
 # ---------------------------------------------------------------------------
 
 
+def _bloom_filtered(probe, keys, n_bits):
+    """``probe`` rows whose ``o_orderkey`` passes a bloom filter built
+    over ``keys``."""
+    bitmap = bloom.build_bloom_df(keys, "o_orderkey", n_bits)
+    return (
+        probe.join(F.broadcast(bitmap))
+        .filter(
+            bloom.might_contain_col(F.col("__bloom"), F.col("o_orderkey"), n_bits)
+        )
+        .drop("__bloom")
+    )
+
+
 def test_bloom_no_false_negatives(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     keys = orders.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    bitmap = bloom.build_bloom(keys, "o_orderkey", bloom.optimal_n_bits(500))
-    survivors = orders.filter(
-        bloom.might_contain(bitmap, F.col("o_orderkey"))
-    )
+    survivors = _bloom_filtered(orders, keys, bloom.optimal_n_bits(500))
     # every true member must survive the pre-filter
     missed = keys.join(survivors, "o_orderkey", "left_anti").count()
     assert missed == 0
@@ -47,13 +57,10 @@ def test_bloom_false_positive_rate_bounded(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     keys = orders.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
     n_keys = keys.count()
-    bitmap = bloom.build_bloom(
-        keys, "o_orderkey", bloom.optimal_n_bits(n_keys, fpp=0.01)
-    )
     non_members = orders.filter(F.col("o_orderkey") % 7 != 0)
     n_non = non_members.count()
-    fp = non_members.filter(
-        bloom.might_contain(bitmap, F.col("o_orderkey"))
+    fp = _bloom_filtered(
+        non_members, keys, bloom.optimal_n_bits(n_keys, fpp=0.01)
     ).count()
     # generous bound: 5x the design fpp covers small-sample variance
     assert fp <= max(5, int(n_non * 0.05))
@@ -90,7 +97,9 @@ def test_bloom_semi_join_left_semi(spark, sf_dir):
 
 def test_bloom_validation():
     with pytest.raises(ValueError, match="n_bits"):
-        bloom.build_bloom(None, "k", 100)  # not a multiple of 64
+        bloom.build_bloom_df(None, "k", 100)  # not a multiple of 64
+    with pytest.raises(ValueError, match="n_hashes"):
+        bloom.build_bloom_df(None, "k", 128, n_hashes=0)
     with pytest.raises(ValueError, match="fpp"):
         bloom.optimal_n_bits(10, fpp=1.5)
     assert bloom.optimal_n_bits(10_000, 0.01) % 64 == 0

@@ -51,15 +51,6 @@ def test_ngram_jaccard_finds_near_dup(docs):
     assert all(p[0] < p[1] for p in got)
 
 
-def test_minhash_candidates_cover_exact_dups(docs):
-    cands = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_candidates(docs).collect()
-    }
-    assert (1, 2) in cands
-    assert (1, 3) in cands
-
-
 def test_minhash_dedup_pairs_subset_of_exact(docs):
     mh = {
         (r["id_a"], r["id_b"])
@@ -74,8 +65,7 @@ def test_minhash_dedup_pairs_subset_of_exact(docs):
 
 
 def test_simhash_identical_texts_same_hash(docs):
-    out = docs.select("doc_id", dedup.simhash("text").alias("sh")).collect()
-    sh = {r["doc_id"]: r["sh"] for r in out}
+    sh = {r["id"]: r["sh"] for r in dedup.simhash_table(docs).collect()}
     assert sh[1] == sh[2] == sh[3]
     assert sh[1] != sh[5]
 

@@ -72,66 +72,6 @@ def test_merge_ignore_idempotent(spark):
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 
-def _has_delta() -> bool:
-    try:
-        import delta  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_delta_merge_branch_selection(spark, tmp_path):
-    """delta_merge must report honestly which engine ran: False (and
-    target untouched) when delta-spark is absent — the caller then
-    takes the join-based path — True with real MERGE INTO semantics
-    when present. This env exercises whichever branch its classpath
-    provides; the other branch is covered by the same assertions when
-    run on a Delta-enabled cluster."""
-    path = str(tmp_path / "tgt")
-    tgt = _target(spark)
-    src = _source(spark)
-    if not _has_delta():
-        tgt.write.mode("overwrite").parquet(path)
-        assert merge.delta_merge(spark, path, src, ["key"], update=True) is False
-        # fallback contract: target bytes untouched, caller must run the
-        # join-based merge + merge_write instead
-        got = {r["key"]: r["val"] for r in spark.read.parquet(path).collect()}
-        assert got == {"k1": "old1", "k2": "old2"}
-    else:
-        tgt.write.format("delta").mode("overwrite").save(path)
-        assert merge.delta_merge(spark, path, src, ["key"], update=True) is True
-        got = {
-            r["key"]: r["val"]
-            for r in spark.read.format("delta").load(path).collect()
-        }
-        assert got == {"k1": "old1", "k2": "new2", "k3": "new3"}
-
-
-def test_delta_merge_parity_with_join_merge(spark, tmp_path):
-    """Both merge engines implement the same SCD-1 contract
-    (etl_s3_snowflake_d_item.py:71-79): whichever is active must equal
-    the join-based result row-for-row, so a cluster can switch between
-    them without a semantic diff."""
-    tgt = _target(spark)
-    src = _source(spark)
-    expect = sorted(map(tuple, merge.merge_update(tgt, src, ["key"]).collect()))
-    if _has_delta():
-        path = str(tmp_path / "tgt_parity")
-        tgt.write.format("delta").mode("overwrite").save(path)
-        merge.delta_merge(spark, path, src, ["key"], update=True)
-        got = sorted(
-            map(tuple, spark.read.format("delta").load(path).collect())
-        )
-    else:
-        # Delta absent: the documented fallback IS the join-based merge
-        # persisted via merge_write — assert that full path round-trips.
-        path = str(tmp_path / "tgt_fallback")
-        merge.merge_write(merge.merge_update(tgt, src, ["key"]), path)
-        got = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert got == expect
-
-
 def _scd2_target(spark):
     # k1: current v2 + closed v1 history; k2: current only; k3: current only
     rows = [

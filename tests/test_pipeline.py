@@ -158,75 +158,6 @@ def test_catalog_publish_registers_declared_schemas(spark, warehouse):
         pipeline.WAREHOUSE_SCHEMAS["d_event"] = orig
 
 
-def test_partitioned_fact_merge_and_rollup(spark, tmp_path):
-    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import (
-        marketing,
-    )
-
-    wh = str(tmp_path / "wh_part")
-    fresh = marketing.build_f_events(spark, SF)
-    path = pipeline.merge_fact_partitioned(spark, wh, fresh)
-    import os
-
-    # Physically partitioned by date.
-    assert any(
-        d.startswith("event_date=") for d in os.listdir(path)
-    )
-    n1 = spark.read.parquet(path).count()
-    assert n1 == fresh.count()
-
-    # Day 2: one changed row (same keys, new value) and one new row.
-    changed = fresh.orderBy("event_id").limit(1).withColumn(
-        "event_value", F.col("event_value") + 500.0
-    )
-    max_id = fresh.agg(F.max("event_id")).first()[0]
-    new = changed.withColumn("event_id", F.lit(max_id + 1))
-    delta = changed.unionByName(new)
-    before_dirs = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith("event_date=")
-    }
-    pipeline.merge_fact_partitioned(spark, wh, delta)
-    after_dirs = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith("event_date=")
-    }
-    fact = spark.read.parquet(path)
-    assert fact.count() == n1 + 1
-    # Only the touched date partitions were rewritten.
-    affected = {
-        f"event_date={r[0]}"
-        for r in delta.select(
-            F.to_date("event_time").cast("string")
-        ).distinct().collect()
-    }
-    untouched = set(before_dirs) - affected
-    assert untouched and all(
-        before_dirs[d] == after_dirs[d] for d in untouched
-    )
-    # Surrogate keys stay unique.
-    assert fact.select("guid_event").distinct().count() == fact.count()
-
-    # Continuous aggregate equals a full recompute of the fact.
-    rollup_path = pipeline.update_daily_rollup(spark, wh, path, fresh)
-    pipeline.update_daily_rollup(spark, wh, path, delta)
-    rollup = spark.read.parquet(rollup_path)
-    full = (
-        fact.groupBy(
-            F.col("event_date").alias("period"), F.col("event_name")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("event_value"), 2).alias("total_value"),
-        )
-    )
-    got = {tuple(r) for r in rollup.collect()}
-    expect = {tuple(r) for r in full.collect()}
-    assert got == expect
-
-
 def test_stagewise_run_matches_full_pipeline(spark, tmp_path):
     # Running each stage as its own invocation (the scheduler-task
     # shape) must produce the same warehouse as the one-shot pipeline.
@@ -457,10 +388,9 @@ def _day2_source(spark, tmp_path):
 
 def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
     """Every warehouse table file is zstd with v2 data pages — plain and
-    versioned warehouses over two days, the materialized ``kpi_*``
-    views, the partitioned fact and the daily rollup — while a
-    ``sources.versioned`` dedup-store commit keeps the session's
-    default codec and v1 pages."""
+    versioned warehouses over two days and the materialized ``kpi_*``
+    views — while a ``sources.versioned`` dedup-store commit keeps the
+    session's default codec and v1 pages."""
     import os
 
     from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import (
@@ -483,16 +413,6 @@ def test_warehouse_writes_zstd_v2_pages_only(spark, tmp_path):
     for view in marketing.WAREHOUSE_KPI_SQL:
         chunks = list(_column_chunks(os.path.join(plain, f"kpi_{view}")))
         assert chunks and {ch.compression for ch in chunks} == {"ZSTD"}, view
-
-    fresh = marketing.build_f_events(spark, SF)
-    delta = marketing.build_f_events(spark, day2)
-    part = str(tmp_path / "part")
-    for day in (fresh, delta):
-        fact = pipeline.merge_fact_partitioned(spark, part, day)
-        rollup = pipeline.update_daily_rollup(spark, part, fact, day)
-    assert _assert_warehouse_encoding(fact) == {"event_time"}
-    rollup_chunks = list(_column_chunks(rollup))
-    assert rollup_chunks and {ch.compression for ch in rollup_chunks} == {"ZSTD"}
 
     store = str(tmp_path / "store")
     vt.write_version(spark.range(0, 1000).withColumnRenamed("id", "doc_id"), store)

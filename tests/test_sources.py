@@ -1,4 +1,4 @@
-"""Source readers and sinks (SURVEY.md §2.1 S1-S5, S8)."""
+"""Source readers and sinks (SURVEY.md §2.1 S1-S5)."""
 
 from __future__ import annotations
 
@@ -34,21 +34,6 @@ def test_read_csv_inferred_with_rename(spark, csv_path):
     assert df.count() == 2
 
 
-def test_read_csv_typed_failfast(spark, csv_path):
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.StringType()),
-            T.StructField("event_payload", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    df = readers.read_csv_typed(spark, csv_path, schema)
-    assert df.schema == schema
-    bad_schema = T.StructType([T.StructField("only_one", T.LongType())])
-    with pytest.raises(Exception):
-        readers.read_csv_typed(spark, csv_path, bad_schema).collect()
-
-
 def test_write_partitioned_prunes(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"2024-01-{(i % 3) + 1:02d}") for i in range(30)], "id long, day string"
@@ -59,14 +44,6 @@ def test_write_partitioned_prunes(spark, tmp_path):
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(day" in plan
     assert back.count() == 10
-
-
-def test_stage_and_drop_temp_views(spark):
-    df = spark.range(3)
-    writers.stage_temp_view(df, "tmp_stage_x")
-    assert spark.table("tmp_stage_x").count() == 3
-    writers.drop_temp_views(spark, ["tmp_stage_x"])
-    assert "tmp_stage_x" not in [t.name for t in spark.catalog.listTables()]
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
@@ -274,35 +251,6 @@ def test_read_parquet_evolved_null_backfill(spark, tmp_path):
     assert set(evolved.columns) == {"k", "v", "tag"}
     rows = {r.k: r.tag for r in evolved.collect()}
     assert rows == {1: None, 2: "new"}
-
-
-def test_write_training_shards_manifest(spark, tmp_path):
-    """Shard export: every shard respects the row bound, the manifest's
-    footer-read counts sum to the dataset size, and shard membership is
-    reproducible when keyed on a deterministic position column."""
-    import json
-    import os
-
-    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
-        writers,
-    )
-
-    df = spark.range(1000).select(
-        F.col("id").alias("pos"), (F.col("id") * 2).alias("payload")
-    )
-    path = str(tmp_path / "shards")
-    manifest = writers.write_training_shards(
-        df, path, max_records_per_file=100, shuffle_col="pos"
-    )
-    assert manifest["total_rows"] == 1000
-    assert manifest["n_shards"] >= 10
-    assert all(sh["rows"] <= 100 for sh in manifest["shards"])
-    on_disk = json.load(open(os.path.join(path, "_manifest.json")))
-    assert on_disk["total_rows"] == 1000
-    # the loader contract: reading the shards back equals the input
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert {r.pos for r in back.collect()} == set(range(1000))
 
 
 def test_reader_writer_layer_through_nonlocal_scheme(spark, tmp_path):

@@ -494,61 +494,14 @@ def test_chunk_documents_windows(spark):
     }
 
 
-def test_streaming_warehouse_merge_idempotent(spark, tmp_path):
-    """foreachBatch continuous ingest: two micro-batches with an
-    overlapping key merge insert-if-absent into the warehouse dir;
-    re-running the whole stream from a fresh checkpoint (an
-    at-least-once replay) changes nothing."""
-    import datetime as dt
-    import os
-    import time
-
-    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.streaming import (
-        pipeline as sp,
-    )
-
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def _write(path, rows):
-        spark.createDataFrame(
-            [(i, base, i, "view", float(i), "{}") for i in rows],
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    src = str(tmp_path / "stream")
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, rows in enumerate([[1, 2, 3], [3, 4]]):  # key 3 overlaps
-        f = str(tmp_path / f"b{i}")
-        _write(f, rows)
-        part = [p for p in os.listdir(f) if p.endswith(".parquet")][0]
-        dst = os.path.join(src, f"{i:03d}.parquet")
-        os.rename(os.path.join(f, part), dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
-    tgt = str(tmp_path / "wh_fact")
-    out = sp.run_streaming_warehouse_merge(
-        spark, src + "/*", tgt, checkpoint_dir=str(tmp_path / "ck1")
-    )
-    assert sorted(r["event_id"] for r in out.collect()) == [1, 2, 3, 4]
-    # replay from scratch: fresh checkpoint re-delivers every batch;
-    # the key-idempotent merge must be a no-op on the target
-    out2 = sp.run_streaming_warehouse_merge(
-        spark, src + "/*", tgt, checkpoint_dir=str(tmp_path / "ck2")
-    )
-    assert sorted(r["event_id"] for r in out2.collect()) == [1, 2, 3, 4]
-    assert out2.count() == 4
-
-
 def test_sketch_streams_to_versioned_layer(spark, tmp_path):
-    """Production-shaped sketch sinks: the streaming HLL/CMS registers
-    land in the versioned table layer via foreachBatch — one atomic
-    version per micro-batch. Across >= 2 micro-batches the FINAL
-    version's registers (finalized) must equal the memory-sink path
-    bit-for-bit (register MAX/COUNT are micro-batch-order invariant),
-    and the intermediate version must equal the batch sketch over the
-    first file alone (time travel to an ingest point)."""
+    """Production-shaped sketch sink: the streaming HLL registers land
+    in the versioned table layer via foreachBatch — one atomic version
+    per micro-batch. Across >= 2 micro-batches the FINAL version's
+    registers (finalized) must equal the memory-sink path bit-for-bit
+    (register MAX is micro-batch-order invariant), and the intermediate
+    version must equal the batch sketch over the first file alone (time
+    travel to an ingest point)."""
     import datetime as dt
     import os
     import time
@@ -585,7 +538,6 @@ def test_sketch_streams_to_versioned_layer(spark, tmp_path):
         os.rename(os.path.join(f, part), dst)
         os.utime(dst, (now + i * 10, now + i * 10))
 
-    # --- HLL ---
     tbl = str(tmp_path / "hll_regs")
     via_versioned = sp.run_hll_stream_to_versioned(
         spark, src + "/*", tbl, checkpoint_dir=str(tmp_path / "ck_hll")
@@ -607,16 +559,6 @@ def test_sketch_streams_to_versioned_layer(spark, tmp_path):
     canon = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     assert canon(first_regs) == canon(first_batch)
 
-    # --- CMS ---
-    tbl2 = str(tmp_path / "cms_regs")
-    cms_versioned = sp.run_cms_stream_to_versioned(
-        spark, src + "/*", tbl2, checkpoint_dir=str(tmp_path / "ck_cms")
-    ).collect()
-    cms_memory = sp.run_cms_stream_to_memory(
-        spark, src + "/*", query_name="cms_vs_versioned_test"
-    ).collect()
-    assert [tuple(r) for r in cms_versioned] == [tuple(r) for r in cms_memory]
-    assert len(vt.table_versions(tbl2)) >= 2
 
 
 def test_unigram_surprisal_values_and_bands(spark):

@@ -137,34 +137,6 @@ def test_schema_evolution_on_append(spark, tmp_path):
     assert got == {1: ("a", None), 2: ("b", 9.5)}
 
 
-def test_streaming_versioned_merge_commits_per_batch(spark, tmp_path, sf_dir):
-    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.streaming import (
-        pipeline as sp,
-    )
-
-    table = str(tmp_path / "vt_stream")
-    out = sp.run_streaming_versioned_merge(
-        spark,
-        f"{sf_dir}/events.parquet",
-        table,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert out.count() == n_events
-    versions = vt.table_versions(table)
-    assert versions  # at least one committed version
-    # re-running with a FRESH checkpoint replays everything; the merge
-    # is idempotent on event_id, so the latest snapshot is unchanged.
-    out2 = sp.run_streaming_versioned_merge(
-        spark,
-        f"{sf_dir}/events.parquet",
-        table,
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-    )
-    assert out2.count() == n_events
-    assert len(vt.table_versions(table)) > len(versions) - 1  # history grew
-
-
 def test_append_race_does_not_lose_winners_prefixes(spark, tmp_path):
     """Lost-update guard: an appender that loses the commit race must
     rebuild its prefix list from the WINNER's manifest before retrying,

@@ -15,7 +15,7 @@ contract).
 
 Usage:
     python tools/core_probe.py --replicas 10 --cores 32,8 \
-        --queries q1,q2,... --out SCALE_PROBE_r13.json \
+        --queries q1,q2,... --out PATH \
         [--extra cc_frontier=/tmp/cc_probe_out.json ...]
 
 The builder reuses /tmp/docs{N}x.parquet and /tmp/star{N}x when they
@@ -145,7 +145,9 @@ def main() -> None:
     replicas = int(opt("--replicas", "10"))
     cores = [int(c) for c in opt("--cores", "32,8").split(",")]
     queries = opt("--queries", "").split(",")
-    out_path = opt("--out", os.path.join(REPO, "SCALE_PROBE_r13.json"))
+    out_path = opt("--out")
+    if out_path is None:
+        raise SystemExit("core_probe: --out PATH is required")
     extras = {}
     while "--extra" in args:
         k, _, p = opt("--extra").partition("=")

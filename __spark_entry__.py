@@ -712,23 +712,23 @@ def q_media_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_image_dhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup pairs (operators/dedup.py:
-    image_dhash_near_dups): dHash + the exact banded Hamming join
+    media_near_dups, modality "image"): dHash + the exact banded Hamming join
     (pigeonhole blocking, recall 1.0) — the image leg of the dedup
     suite (VERDICT r08 item 3). Oracle: brute-force all-pairs Hamming
     over independently recomputed hashes."""
-    return dedup.image_dhash_near_dups(
-        multimodal.synthetic_near_dup_image_table(spark, 16), max_hamming=3
+    return dedup.media_near_dups(
+        multimodal.synthetic_near_dup_image_table(spark, 16), "image"
     ).orderBy("media_id_a", "media_id_b")
 
 
 def q_image_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end image dedup (operators/dedup.py:
-    image_dedup_survivors): connected components over the dHash pair
+    media_dedup_survivors): connected components over the dHash pair
     graph, min-id survivor per component with member count — the image
     twin of dedup_semantic's survivor election. Oracle: union-find over
     the independently recomputed brute-force pair set."""
-    return dedup.image_dedup_survivors(
-        multimodal.synthetic_near_dup_image_table(spark, 16), max_hamming=3
+    return dedup.media_dedup_survivors(
+        multimodal.synthetic_near_dup_image_table(spark, 16), "image"
     )
 
 
@@ -748,13 +748,13 @@ def q_media_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup pairs (operators/dedup.py:
-    audio_fingerprint_near_dups): energy-delta fingerprint + the exact
+    media_near_dups, modality "audio"): energy-delta fingerprint + the exact
     banded Hamming join (pigeonhole blocking, recall 1.0) — completes
     text/image/audio dedup parity (VERDICT r09 item 2). Oracle:
     brute-force all-pairs Hamming over independently recomputed
     fingerprints."""
-    return dedup.audio_fingerprint_near_dups(
-        multimodal.synthetic_near_dup_audio_table(spark, 16), max_hamming=3
+    return dedup.media_near_dups(
+        multimodal.synthetic_near_dup_audio_table(spark, 16), "audio"
     ).orderBy("media_id_a", "media_id_b")
 
 
@@ -778,18 +778,18 @@ def q_media_jpeg_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audio dedup (operators/dedup.py:
-    audio_dedup_survivors): connected components over the fingerprint
+    media_dedup_survivors): connected components over the fingerprint
     pair graph, min-id survivor per component with member count —
     remediation parity with the image leg. Oracle: union-find over
     the independently recomputed brute-force pair set."""
-    return dedup.audio_dedup_survivors(
-        multimodal.synthetic_near_dup_audio_table(spark, 16), max_hamming=3
+    return dedup.media_dedup_survivors(
+        multimodal.synthetic_near_dup_audio_table(spark, 16), "audio"
     )
 
 
 def q_audio_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental audio dedup (operators/dedup.py:
-    audio_fingerprint_incremental): even groups' BASE clips are the
+    media_incremental, modality "audio"): even groups' BASE clips are the
     persisted 8-byte fingerprint store; the batch contains even-group
     variants (store-hit path), odd-group variants (batch-internal
     path), and odd-group bases (keep path) — the image incremental
@@ -801,7 +801,7 @@ def q_audio_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.filter(F.col("media_id") % 6 == 1)
     )
     batch = tbl.filter(F.col("media_id") % 6 != 1)
-    return dedup.audio_fingerprint_incremental(store, batch).orderBy(
+    return dedup.media_incremental(store, batch, "audio").orderBy(
         "media_id"
     )
 
@@ -849,31 +849,31 @@ def q_media_avi_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_video_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-dup pairs (operators/dedup.py:
-    video_fingerprint_near_dups): temporal fingerprint + the exact
+    media_near_dups, modality "video"): temporal fingerprint + the exact
     banded Hamming join at radius 4 (JPEG quantization spreads edits
     into adjacent dHash boxes; pigeonhole recall stays 1.0 at any
     radius). Oracle: brute-force all-pairs Hamming over independently
     recomputed fingerprints."""
-    return dedup.video_fingerprint_near_dups(
-        multimodal.synthetic_near_dup_video_table(spark, 12), max_hamming=4
+    return dedup.media_near_dups(
+        multimodal.synthetic_near_dup_video_table(spark, 12), "video"
     ).orderBy("media_id_a", "media_id_b")
 
 
 def q_video_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end video dedup (operators/dedup.py:
-    video_dedup_survivors): connected components over the temporal
+    media_dedup_survivors): connected components over the temporal
     fingerprint pair graph, min-id survivor per component with member
     count — remediation parity with the image/audio legs. Oracle:
     union-find over the independently recomputed brute-force pair
     set."""
-    return dedup.video_dedup_survivors(
-        multimodal.synthetic_near_dup_video_table(spark, 12), max_hamming=4
+    return dedup.media_dedup_survivors(
+        multimodal.synthetic_near_dup_video_table(spark, 12), "video"
     )
 
 
 def q_video_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental video dedup (operators/dedup.py:
-    video_fingerprint_incremental): even groups' BASE videos are the
+    media_incremental, modality "video"): even groups' BASE videos are the
     persisted 8-byte fingerprint store; the batch contains even-group
     variants (store-hit path), odd-group variants (batch-internal
     path), and odd-group bases (keep path) — the image/audio
@@ -885,7 +885,7 @@ def q_video_fp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.filter(F.col("media_id") % 6 == 1)
     )
     batch = tbl.filter(F.col("media_id") % 6 != 1)
-    return dedup.video_fingerprint_incremental(store, batch).orderBy(
+    return dedup.media_incremental(store, batch, "video").orderBy(
         "media_id"
     )
 
@@ -1009,7 +1009,7 @@ def q_doc_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_image_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental perceptual image dedup (operators/dedup.py:
-    image_dhash_incremental): even groups' BASE images are the
+    media_incremental, modality "image"): even groups' BASE images are the
     persisted 8-byte hash store; the batch contains even-group
     variants (store-hit path), odd-group variants (batch-internal
     path), and odd-group bases (keep path). Exact pigeonhole banding —
@@ -1021,7 +1021,7 @@ def q_image_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.filter(F.col("media_id") % 6 == 1)
     )
     batch = tbl.filter(F.col("media_id") % 6 != 1)
-    return dedup.image_dhash_incremental(store, batch).orderBy("media_id")
+    return dedup.media_incremental(store, batch, "image").orderBy("media_id")
 
 
 def q_doc_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2389,7 +2389,7 @@ def q_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming perceptual image dedup gate (streaming/pipeline.py:
-    run_streaming_image_dedup): two ordered micro-batches of REAL
+    run_streaming_media_dedup, modality "image"): two ordered micro-batches of REAL
     raster images (the g%4 BMP/PPM/PNG/GIF fixture) are dHash'd live
     and checked against a persisted 8-byte hash store seeded with the
     even-group bases; decisions and survivor hashes commit
@@ -2466,8 +2466,8 @@ def q_streaming_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     PHASE_TIMINGS["streaming_image_dedup"]["setup_sec"] = round(
         _time.time() - _setup0, 2
     )
-    return streaming_pipeline.run_streaming_image_dedup(
-        spark, src_dir, store, decisions, checkpoint_dir=ckpt,
+    return streaming_pipeline.run_streaming_media_dedup(
+        spark, "image", src_dir, store, decisions, checkpoint_dir=ckpt,
         batch_secs=_batch_secs,
     ).orderBy("media_id")
 
@@ -2583,8 +2583,8 @@ def q_streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming video content dedup gate (streaming/pipeline.py:
-    run_streaming_video_dedup — the image gate's shared machinery at
-    the video grain): two ordered micro-batches of REAL MJPEG-class
+    run_streaming_media_dedup, modality "video" — the image gate's
+    machinery at the video grain): two ordered micro-batches of REAL MJPEG-class
     streams are temporally fingerprinted live and checked against a
     persisted 8-byte store seeded with the even-group bases; decisions
     and survivor fingerprints commit effectively-once; batch 2's
@@ -2657,16 +2657,16 @@ def q_streaming_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tbl = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     vt.write_version(
-        multimodal.video_fingerprint_table(
+        dedup.MEDIA_FINGERPRINTS["video"].table(
             tbl.filter(F.col("media_id") % 6 == 1)
-        ).select("media_id", "vfp"),
+        ),
         store,
     )
     PHASE_TIMINGS["streaming_video_dedup"]["setup_sec"] = round(
         _time.time() - _setup0, 2
     )
-    return streaming_pipeline.run_streaming_video_dedup(
-        spark, src_dir, store, decisions, checkpoint_dir=ckpt,
+    return streaming_pipeline.run_streaming_media_dedup(
+        spark, "video", src_dir, store, decisions, checkpoint_dir=ckpt,
         batch_secs=_batch_secs,
     ).orderBy("media_id")
 
@@ -3418,7 +3418,7 @@ def q_embedding_topk_ivf_pq_indexed(
     committed to the versioned table layer, and TWO incremental
     corpus batches (even / odd vec_id) are ADC-scanned against the
     LOADED index with zero training jobs — the embedding analog of
-    image_dhash_incremental. At 100 TB the index is state (kilobytes,
+    media_incremental. At 100 TB the index is state (kilobytes,
     versioned, time-travelable), batches are data. Oracle: the
     independent pure-Python replica trains the same artifacts once
     and scans both batches (tools/gen_expected.py:

@@ -2180,7 +2180,7 @@ def dhash_table(df: DataFrame) -> DataFrame:
     """(media_id, dhash) per DECODABLE image via ``mapInPandas`` —
     map-only Arrow batches, zero shuffles; the join-side half of the
     perceptual near-dup pipeline (operators/dedup.py:
-    image_dhash_near_dups). Payloads the pixel decoder can't handle
+    MEDIA_FINGERPRINTS["image"]). Payloads the pixel decoder can't handle
     (structural GIF/JPEG fixtures, truncated files) are SKIPPED, not
     fatal (ADVICE r09): a crawl's media table is format-mixed, and one
     exotic payload must not kill the executor — undecodable images
@@ -3086,7 +3086,7 @@ def video_fingerprint_table(df: DataFrame) -> DataFrame:
     """(media_id, n_frames, vfp) per decodable MJPEG-class payload via
     ``mapInPandas`` — map-only Arrow batches, zero shuffles; the
     join-side half of the video near-dup pipeline (operators/dedup.py:
-    video_fingerprint_near_dups). Undecodable payloads skip, not
+    MEDIA_FINGERPRINTS["video"]). Undecodable payloads skip, not
     fatal — the :func:`dhash_table` posture."""
     schema = T.StructType(
         [
@@ -3652,7 +3652,7 @@ def audio_fingerprint_table(df: DataFrame) -> DataFrame:
     """(media_id, afp) per decodable 16-bit PCM WAV via
     ``mapInPandas`` — map-only Arrow batches, zero shuffles; the
     join-side half of the audio near-dup pipeline
-    (operators/dedup.py:audio_fingerprint_near_dups). Undecodable
+    (operators/dedup.py:MEDIA_FINGERPRINTS["audio"]). Undecodable
     payloads (MP4, truncated, non-PCM) are skipped, not fatal — the
     :func:`dhash_table` posture."""
     schema = T.StructType(

@@ -17,8 +17,9 @@ broadcast when the delta side is small — the common daily-load case at
 scale: broadcast the day's delta against the 100 TB target, zero shuffle
 of the big side). Without a transactional table format the caller owns
 atomicity of the rewrite: the warehouse writes each result to a
-staging path and swaps it in (``plans.pipeline._swap_write``), or
-commits it as a version (:func:`versioned_merge`).
+staging path and swaps it in (``plans.pipeline._swap_write``); the
+streaming gates commit insert-if-absent appends as versions
+(:func:`append_if_absent`).
 """
 
 from __future__ import annotations
@@ -243,63 +244,44 @@ def merge_scd2(
     )
 
 
-def versioned_merge(
-    spark,
-    table_path: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    update: bool,
-) -> int:
-    """Transactional MERGE without delta-spark: read the latest
-    snapshot of a versioned table (sources/versioned.py), apply the
-    join-based merge, commit the result as a new atomic version.
-    Returns the committed version.
-
-    A concurrent reader keeps its resolved snapshot (manifests are
-    immutable) and a concurrent writer loses the O_EXCL commit race and
-    retries, so the merge is atomic and isolated even on plain parquet.
-    An update merge rewrites the whole table, as the staging-swap does —
-    the version layer adds atomicity, not row-level deltas.
-    """
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    target = vt.read_version(spark, table_path)
-    if not update:
-        # Insert-if-absent commits as an APPEND of the anti-join DELTA
-        # (r12): the snapshot content is identical to rewriting
-        # target ∪ new — the manifest extends the previous prefixes
-        # with one new-rows prefix — but the commit writes O(batch)
-        # instead of O(store) bytes. At 100 TB a per-micro-batch
-        # store REWRITE is a non-starter; this is the posture every
-        # streaming gate's decisions/store/codes/vectors commit rides.
-        # Replay idempotence is unchanged (a replayed batch's rows all
-        # hit the anti-join). compact()/vacuum() bound the prefix
-        # count when triggers accumulate.
-        src = _dedup_source(source, keys)
-        new_rows = src.alias("s").join(
-            target.select(*keys).alias("t"),
-            on=_key_cond(keys),
-            how="left_anti",
-        )
-        return vt.write_version(
-            new_rows.select(*target.columns), table_path, mode="append"
-        )
-    return vt.write_version(merge_update(target, source, keys), table_path)
-
-
 def append_if_absent(
     spark, table_path: str, source: DataFrame, keys: Sequence[str]
 ) -> int:
-    """Insert-if-absent commit of ``source`` into a versioned table:
-    :func:`versioned_merge` with ``update=False`` once the table has a
-    version, else ``source`` itself as the first version. Replaying the
-    same rows commits no new keys, which is what makes a replayed
-    streaming batch effectively-once. Returns the committed version."""
+    """Insert-if-absent commit of ``source`` into a versioned table
+    (sources/versioned.py): the first commit writes ``source`` itself;
+    later ones append the source rows whose key the latest snapshot
+    lacks. Replaying the same rows commits no new keys, which is what
+    makes a replayed streaming batch effectively-once. Returns the
+    committed version.
+
+    A concurrent reader keeps its resolved snapshot (manifests are
+    immutable) and a concurrent writer loses the O_EXCL commit race
+    and retries, so the merge is atomic and isolated even on plain
+    parquet."""
     from ..sources import versioned as vt  # noqa: PLC0415
 
-    if vt.table_versions(table_path):
-        return versioned_merge(spark, table_path, source, keys, update=False)
-    return vt.write_version(source, table_path)
+    if not vt.table_versions(table_path):
+        return vt.write_version(source, table_path)
+    target = vt.read_version(spark, table_path)
+    # Insert-if-absent commits as an APPEND of the anti-join DELTA
+    # (r12): the snapshot content is identical to rewriting
+    # target ∪ new — the manifest extends the previous prefixes
+    # with one new-rows prefix — but the commit writes O(batch)
+    # instead of O(store) bytes. At 100 TB a per-micro-batch
+    # store REWRITE is a non-starter; this is the posture every
+    # streaming gate's decisions/store/codes/vectors commit rides.
+    # Replay idempotence is unchanged (a replayed batch's rows all
+    # hit the anti-join). compact()/vacuum() bound the prefix
+    # count when triggers accumulate.
+    src = _dedup_source(source, keys)
+    new_rows = src.alias("s").join(
+        target.select(*keys).alias("t"),
+        on=_key_cond(keys),
+        how="left_anti",
+    )
+    return vt.write_version(
+        new_rows.select(*target.columns), table_path, mode="append"
+    )
 
 
 def scd2_point_in_time(

@@ -1344,7 +1344,7 @@ def save_ivf_pq_index(spark, cent, books, path: str) -> dict:
     two index-sized tables, ``{path}/centroids`` (cell, centroid) and
     ``{path}/codebooks`` (subspace, code, centroid) — the embedding
     analog of the image dHash store (operators/dedup.py:
-    image_dhash_incremental): at 100 TB nobody retrains per query;
+    media_incremental): at 100 TB nobody retrains per query;
     the index is state, batches are data. Atomic versioned commits
     give rollback/time-travel over index generations for free; the
     payload is O(n_cells·dim + m·ksub·dim/m) doubles — kilobytes —
@@ -1828,7 +1828,7 @@ def semantic_dedup_incremental(
     """Incremental SEMANTIC near-dup gate over the persisted IVF-PQ
     codes store — the embedding leg of the crawl-load posture
     (operators/dedup.py: ``minhash_incremental`` for text,
-    ``hamming_incremental`` for image dHash / audio fingerprints):
+    ``media_incremental`` for image, audio and video fingerprints):
     each incoming batch of embeddings is checked against the
     already-ingested corpus AND against its own batch without ever
     rescanning the corpus vectors.
@@ -1855,7 +1855,8 @@ def semantic_dedup_incremental(
        or the ADC radius, like the probabilistic MinHash store; unlike
        the pigeonhole Hamming stores, which are exact within radius);
     5. elects greedy first-occurrence survivors: min store id, else
-       min smaller batch id — the shared incremental-dedup contract.
+       min smaller batch id — the shared incremental-dedup contract
+       (operators/dedup.py:_elect).
 
     ``corpus`` is the raw vectors table consulted ONLY for the exact
     re-rank shortlist join (candidate-bounded) — at 100 TB the gate
@@ -1875,6 +1876,7 @@ def semantic_dedup_incremental(
     matched_batch_id, keep), -1 sentinels for no-match.
     """
     from ..sources import versioned  # noqa: PLC0415
+    from .dedup import _elect  # noqa: PLC0415
 
     # callers holding the artifacts (one load per micro-batch, shared
     # with the keeper append) pass index=(cent, books); both paths are
@@ -1926,6 +1928,7 @@ def semantic_dedup_incremental(
             .filter(F.col("cosine_sim") >= F.lit(threshold))
             .groupBy("query_id")
             .agg(F.min("neighbor_id").alias(out))
+            .select(F.col("query_id").alias(id_col), out)
         )
 
     store_hits = verified(shortlist(store_codes), corpus, "matched_store_id")
@@ -1938,35 +1941,11 @@ def semantic_dedup_incremental(
         ),
         "matched_batch_id",
     )
-    return (
-        combined.select(F.col("query_id").alias(id_col))
-        .join(
-            store_hits.select(
-                F.col("query_id").alias(id_col), "matched_store_id"
-            ),
-            id_col,
-            "left",
-        )
-        .join(
-            batch_hits.select(
-                F.col("query_id").alias(id_col), "matched_batch_id"
-            ),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            F.coalesce("matched_store_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_store_id"),
-            F.coalesce("matched_batch_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_batch_id"),
-            (
-                F.col("matched_store_id").isNull()
-                & F.col("matched_batch_id").isNull()
-            ).alias("keep"),
-        )
+    return _elect(
+        combined.select(F.col("query_id").alias(id_col)),
+        store_hits,
+        batch_hits,
+        id_col,
     )
 
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import multimodal as mm
 from ..functions import text as text_fn
 from ..operators import dedup, packing, sampling
 from ..operators.dedup import word_shingles
@@ -167,27 +166,18 @@ def text_funnel_report(
     )
 
 
-def media_funnel_report(
-    media_df: DataFrame,
-    modality: str,
-    hash_table_fn,
-    hash_col: str,
-    max_hamming: int,
-) -> DataFrame:
-    """(stage, n_items, n_tokens=0) for one media modality: total →
-    decodable (the Arrow skip contract as a GATE — whatever the codec
-    can't parse falls out here) → near-dup survivors (banded Hamming
-    pairs → connected components → min-id election). The modality
-    decodes ONCE: the pinned hash table feeds the pair join, the
-    component election, and the flag aggregate."""
-    hashed = (
-        hash_table_fn(media_df)
-        .select("media_id", F.col(hash_col).alias("__sh"))
-        .localCheckpoint(eager=True)
-    )
+def media_funnel_report(media_df: DataFrame, modality: str) -> DataFrame:
+    """(stage, n_items, n_tokens=0) for one media modality (a key of
+    operators/dedup.py:MEDIA_FINGERPRINTS, at its radius):
+    total → decodable (the Arrow skip contract as a GATE — whatever
+    the codec can't parse falls out here) → near-dup survivors (banded
+    Hamming pairs → connected components → min-id election). The
+    modality decodes ONCE: the pinned hash table feeds the pair join,
+    the component election, and the flag aggregate."""
+    spec = dedup.MEDIA_FINGERPRINTS[modality]
+    hashed = spec.table(media_df).localCheckpoint(eager=True)
     pairs = dedup.hamming_near_dups(
-        hashed.select(F.col("media_id").alias("id"), F.col("__sh").alias("sh")),
-        max_hamming,
+        spec.signatures(hashed), spec.radius
     ).select("id_a", "id_b")
     comps = dedup.connected_components(pairs)
     flags = (
@@ -251,15 +241,9 @@ def multimodal_curation_funnel(
 
     builders = [
         lambda: text_funnel_report(docs, F.col("doc_id") % 50 == 0),
-        lambda: media_funnel_report(
-            image_df, "image", mm.dhash_table, "dhash", 3
-        ),
-        lambda: media_funnel_report(
-            audio_df, "audio", mm.audio_fingerprint_table, "afp", 3
-        ),
-        lambda: media_funnel_report(
-            video_df, "video", mm.video_fingerprint_table, "vfp", 4
-        ),
+        lambda: media_funnel_report(image_df, "image"),
+        lambda: media_funnel_report(audio_df, "audio"),
+        lambda: media_funnel_report(video_df, "video"),
     ]
     from ..session import inheritable  # noqa: PLC0415
 

@@ -57,6 +57,20 @@ def _env_bool(name: str, default: str) -> str:
     return value
 
 
+def _env_count(name: str, default: str, star: bool = False) -> str:
+    """A count env knob as the string a Spark conf or master URL takes.
+    Accepts a positive decimal integer (and ``*`` when ``star``);
+    anything else raises here, naming the variable, instead of failing
+    inside the JVM or in a bare ``int()`` at session build."""
+    raw = os.environ.get(name, default)
+    if (star and raw == "*") or (
+        raw.isascii() and raw.isdigit() and int(raw) > 0
+    ):
+        return raw
+    allowed = "a positive integer or '*'" if star else "a positive integer"
+    raise ValueError(f"{name} must be {allowed}, got {raw!r}")
+
+
 def get_spark(
     app_name: str = "marketing_spark_engine",
     master: str | None = None,
@@ -76,10 +90,10 @@ def get_spark(
       batches, not pickled rows.
     - UTC + ANSI-off match the semantics DuckDB oracles compute with.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _env_count("SPARK_GRAFT_CPUS", "32", star=True)
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        _env_count("SPARK_SHUFFLE_PARTITIONS", str(DEFAULT_SHUFFLE_PARTITIONS))
     )
     prefer_smj = _env_bool("SPARK_GRAFT_PREFER_SMJ", "false")
 

@@ -687,103 +687,64 @@ def _run_gate_stream(
     return vt.read_version(spark, decisions_path)
 
 
-def _hash_gate(
-    hash_table_fn, hash_col: str, store_path: str, max_hamming: int
-):
-    """Gate of the signature-dedup streams (image dHash, video temporal
-    fingerprint): hash the batch ONCE (pinned — the check and the
-    keepers join both read it) and check it against the persisted
-    signature store via operators/dedup.py:hamming_incremental."""
+def _hash_gate(spec, store_path: str):
+    """Gate of the media fingerprint streams: hash the batch ONCE with
+    the modality's fingerprint ``spec`` (operators/dedup.py:
+    MEDIA_FINGERPRINTS; pinned — the check and the keepers join both
+    read it) and check it against the persisted signature store via
+    operators/dedup.py:hamming_incremental at the spec's radius."""
     from ..operators import dedup as dedup_ops  # noqa: PLC0415
 
-    def id_sh(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
-        )
-
     def gate(sess: SparkSession, batch: DataFrame):
-        hashed = hash_table_fn(batch).localCheckpoint(eager=True)
+        hashed = spec.table(batch).localCheckpoint(eager=True)
         store = _snapshot_or_empty(
-            sess, store_path, f"media_id long, {hash_col} long"
+            sess, store_path, f"media_id long, {spec.col} long"
         )
         decisions = dedup_ops.hamming_incremental(
-            id_sh(store), id_sh(hashed), max_hamming=max_hamming
+            spec.signatures(store), spec.signatures(hashed), spec.radius
         ).localCheckpoint(eager=True)
         return decisions, hashed
 
     return gate
 
 
-def run_streaming_image_dedup(
+def run_streaming_media_dedup(
     spark: SparkSession,
+    modality: str,
     source_path: str,
     store_path: str,
     decisions_path: str,
-    max_hamming: int = 3,
     state_partitions: int = 4,
     checkpoint_dir: str | None = None,
     batch_secs: list | None = None,
 ) -> DataFrame:
-    """Streaming PERCEPTUAL image dedup gate — the image leg of
-    :func:`run_streaming_minhash_dedup`, completing the multimodal
-    ingest story: each arriving micro-batch of images is dHash'd
-    (map-only Arrow; undecodable payloads skipped, never fatal) and
-    checked against the persisted 8-byte-per-image hash store via the
-    EXACT pigeonhole banding (operators/dedup.py:hamming_incremental
-    runs unchanged — unlike the probabilistic MinHash gate, nothing
-    within the Hamming radius is ever missed). Decisions commit
-    effectively-once through insert-if-absent versioned merges;
-    SURVIVORS' hashes (never pixels) append to the store so the next
-    batch dedups against everything kept so far — recrawled or
-    lightly-edited images arriving later hit the store entries
-    earlier batches appended.
+    """Streaming media content dedup gate — the image, audio or video
+    leg (``modality``, a key of operators/dedup.py:MEDIA_FINGERPRINTS)
+    of :func:`run_streaming_minhash_dedup`, completing the multimodal
+    ingest story: each arriving micro-batch is fingerprinted (map-only
+    Arrow; image dHash, audio energy-delta or video temporal
+    fingerprint; undecodable payloads skipped, never fatal) and
+    checked against the persisted 8-byte-per-item signature store via
+    the EXACT pigeonhole banding (operators/dedup.py:
+    hamming_incremental runs unchanged — unlike the probabilistic
+    MinHash gate, nothing within the modality's Hamming radius is ever
+    missed; video's is 4, since JPEG quantization spreads an edit into
+    adjacent dHash boxes).
+    Decisions commit effectively-once through insert-if-absent
+    versioned merges; SURVIVORS' signatures (never payloads) append
+    to the store so the next batch dedups against everything kept so
+    far — recrawled or lightly-edited items arriving later hit the
+    store entries earlier batches appended.
 
-    State: the hash store is the only cross-batch state and lives in
-    the versioned table layer — Spark-side streaming state is zero
+    State: the signature store is the only cross-batch state and lives
+    in the versioned table layer — Spark-side streaming state is zero
     rows. Output: the final decisions snapshot — (media_id,
     matched_store_id, matched_batch_id, keep), -1 sentinels."""
-    from ..functions.multimodal import dhash_table  # noqa: PLC0415
+    from ..operators.dedup import MEDIA_FINGERPRINTS  # noqa: PLC0415
 
     return _run_gate_stream(
         spark, source_path, decisions_path, "media_id",
-        gate=_hash_gate(dhash_table, "dhash", store_path, max_hamming),
-        early=[],
-        late=[_Store(store_path, "media_id")],
-        state_partitions=state_partitions,
-        checkpoint_dir=checkpoint_dir,
-        batch_secs=batch_secs,
-    )
-
-
-def run_streaming_video_dedup(
-    spark: SparkSession,
-    source_path: str,
-    store_path: str,
-    decisions_path: str,
-    max_hamming: int = 4,
-    state_partitions: int = 4,
-    checkpoint_dir: str | None = None,
-    batch_secs: list | None = None,
-) -> DataFrame:
-    """Streaming VIDEO content dedup gate — the fourth-modality
-    streaming leg, sharing :func:`_hash_gate` with the image gate:
-    each arriving micro-batch of MJPEG-class streams is
-    temporally fingerprinted (functions/multimodal.py:
-    video_fingerprint_table — marker-walk frame split, per-frame
-    dHash, majority fold; undecodable payloads skip) and checked
-    against the persisted 8-byte-per-video fingerprint store. Radius
-    4, the video operators' default (JPEG quantization spread).
-    Decisions and survivor fingerprints commit effectively-once
-    through the versioned layer; Spark-side streaming state is zero
-    rows."""
-    from ..functions.multimodal import video_fingerprint_table  # noqa: PLC0415
-
-    def fp_table(df: DataFrame) -> DataFrame:
-        return video_fingerprint_table(df).select("media_id", "vfp")
-
-    return _run_gate_stream(
-        spark, source_path, decisions_path, "media_id",
-        gate=_hash_gate(fp_table, "vfp", store_path, max_hamming),
+        gate=_hash_gate(MEDIA_FINGERPRINTS[modality], store_path),
         early=[],
         late=[_Store(store_path, "media_id")],
         state_partitions=state_partitions,
@@ -805,7 +766,7 @@ def run_streaming_semantic_dedup(
 ) -> DataFrame:
     """Streaming SEMANTIC (embedding) dedup gate — the fourth-modality
     leg of :func:`run_streaming_minhash_dedup` /
-    :func:`run_streaming_image_dedup`: each arriving micro-batch of
+    :func:`run_streaming_media_dedup`: each arriving micro-batch of
     embeddings is checked against the persisted IVF-PQ codes store
     (operators/similarity.py:semantic_dedup_incremental — probed-cell
     ADC range check over the 32×-compressed codes, exact-cosine

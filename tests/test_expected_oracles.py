@@ -250,7 +250,7 @@ def test_dhash_generator_matches_spark_on_alternate_group_count(spark):
     got_h = _canon(mm.dhash_table(tbl).toPandas())
     exp_h = _canon(gen_expected.gen_image_dhash(24))
     assert got_h == exp_h
-    got_p = _canon(dedup.image_dhash_near_dups(tbl, max_hamming=3).toPandas())
+    got_p = _canon(dedup.media_near_dups(tbl, "image").toPandas())
     exp_p = _canon(gen_expected.gen_image_dhash_dups(24))
     assert got_p == exp_p
 
@@ -405,16 +405,15 @@ def test_audio_fingerprint_generator_matches_spark_on_alternate_group_count(
     got_h = _canon(mm.audio_fingerprint_table(tbl).toPandas())
     exp_h = _canon(gen_expected.gen_audio_fingerprint(24))
     assert got_h == exp_h
-    got_p = _canon(
-        dedup.audio_fingerprint_near_dups(tbl, max_hamming=3).toPandas()
-    )
+    got_p = _canon(dedup.media_near_dups(tbl, "audio").toPandas())
     exp_p = _canon(gen_expected.gen_audio_fingerprint_dups(24))
     assert got_p == exp_p
-    got_s = _canon(dedup.audio_dedup_survivors(tbl, max_hamming=3).toPandas())
+    got_s = _canon(dedup.media_dedup_survivors(tbl, "audio").toPandas())
     assert got_s == _canon(gen_expected.gen_audio_dedup_survivors(24))
-    inc = dedup.audio_fingerprint_incremental(
+    inc = dedup.media_incremental(
         mm.audio_fingerprint_table(tbl.filter(F.col("media_id") % 6 == 1)),
         tbl.filter(F.col("media_id") % 6 != 1),
+        "audio",
     )
     assert _canon(inc.toPandas()) == _canon(
         gen_expected.gen_audio_fp_incremental(24)
@@ -448,7 +447,7 @@ def test_image_survivor_generator_matches_spark_on_alternate_group_count(spark):
     )
 
     tbl = mm.synthetic_near_dup_image_table(spark, 24)
-    got = _canon(dedup.image_dedup_survivors(tbl, max_hamming=3).toPandas())
+    got = _canon(dedup.media_dedup_survivors(tbl, "image").toPandas())
     exp = _canon(gen_expected.gen_image_dedup_survivors(24))
     assert got == exp
 
@@ -466,7 +465,7 @@ def test_image_incremental_generator_matches_spark_on_alternate_group_count(
     store = mm.dhash_table(tbl.filter(F.col("media_id") % 6 == 1))
     batch = tbl.filter(F.col("media_id") % 6 != 1)
     got = _canon(
-        dedup.image_dhash_incremental(store, batch).toPandas()
+        dedup.media_incremental(store, batch, "image").toPandas()
     )
     exp = _canon(gen_expected.gen_image_dhash_incremental(24))
     assert got == exp
@@ -544,6 +543,31 @@ def _assert_matches_oracle_at_sf001(spark, sf_dir, name):
 def test_dedup_gate_matches_expected_oracle_at_sf001(spark, sf_dir, name):
     """The incremental dedup gates against their committed expected
     parquet, at sf0.01 (the only scale those files are generated for)."""
+    _assert_matches_oracle_at_sf001(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "image_dhash_dups",
+        "image_dedup_survivors",
+        "image_dhash_incremental",
+        "audio_fingerprint_dups",
+        "audio_dedup_survivors",
+        "audio_fingerprint_incremental",
+        "video_fingerprint_dups",
+        "video_dedup_survivors",
+        "video_fingerprint_incremental",
+        "dedup_semantic_embeddings",
+        "multimodal_curation_funnel",
+        "minhash_incremental_docs",
+        "dedup_store_forget",
+    ],
+)
+def test_dedup_query_matches_oracle_at_sf001(spark, sf_dir, name):
+    """The batch dedup queries built on the shared decision core of
+    operators/dedup.py (fingerprint spec, survivor election, keep
+    election) against their oracles at sf0.01."""
     _assert_matches_oracle_at_sf001(spark, sf_dir, name)
 
 

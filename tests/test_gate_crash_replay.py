@@ -66,16 +66,14 @@ def _seed_media(spark, base, rows, table_fn):
 def _seed_image(spark, base, sf_dir):
     _seed_media(
         spark, base, multimodal.synthetic_near_dup_image_rows(4),
-        multimodal.dhash_table,
+        dedup.MEDIA_FINGERPRINTS["image"].table,
     )
 
 
 def _seed_video(spark, base, sf_dir):
     _seed_media(
         spark, base, multimodal.synthetic_near_dup_video_rows(4),
-        lambda df: multimodal.video_fingerprint_table(df).select(
-            "media_id", "vfp"
-        ),
+        dedup.MEDIA_FINGERPRINTS["video"].table,
     )
 
 
@@ -136,10 +134,19 @@ def _seed_semantic(spark, base, sf_dir):
     vt.write_version(initial, f"{index}/vectors")
 
 
+def _media_gate(modality):
+    def run(spark, *args, **kwargs):
+        return pipeline.run_streaming_media_dedup(
+            spark, modality, *args, **kwargs
+        )
+
+    return run
+
+
 # modality -> (fixture, gate, name of its store or index directory)
 MODALITIES = {
-    "image": (_seed_image, pipeline.run_streaming_image_dedup, "store"),
-    "video": (_seed_video, pipeline.run_streaming_video_dedup, "store"),
+    "image": (_seed_image, _media_gate("image"), "store"),
+    "video": (_seed_video, _media_gate("video"), "store"),
     "minhash": (_seed_minhash, pipeline.run_streaming_minhash_dedup, "store"),
     "semantic": (
         _seed_semantic, pipeline.run_streaming_semantic_dedup, "index"

@@ -435,12 +435,15 @@ def test_hits_round_pins_auth_inside_hub_checkpoint(spark, monkeypatch):
 
     def executions() -> list[tuple[int, str]]:
         # (id, action) of the executions the store still retains; it
-        # keeps only the most recent ones, so compare by id, not index
+        # keeps only the most recent ones, so compare by id, not index.
+        # Jobs started from thread pools (e.g. an earlier test's
+        # curation funnel) can carry no description: read it as "".
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         out, it = [], store.executionsList().iterator()
         while it.hasNext():
             e = it.next()
-            out.append((int(e.executionId()), e.description().split(" at ")[0]))
+            desc = e.description() or ""
+            out.append((int(e.executionId()), desc.split(" at ")[0]))
         return sorted(out)
 
     def cached_parts(rdd_id: int) -> int:

@@ -994,7 +994,7 @@ def test_image_dhash_banded_join_is_exact():
     }
     got = {
         (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in dedup.image_dhash_near_dups(tbl, max_hamming=3).collect()
+        for r in dedup.media_near_dups(tbl, "image").collect()
     }
     assert got == brute and len(got) >= 8
 
@@ -1027,9 +1027,7 @@ def test_audio_fingerprint_banded_join_is_exact(spark):
     }
     got = {
         (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in dedup.audio_fingerprint_near_dups(
-            tbl, max_hamming=3
-        ).collect()
+        for r in dedup.media_near_dups(tbl, "audio").collect()
     }
     assert got == brute and len(got) >= 8
 
@@ -1368,8 +1366,9 @@ def test_streaming_video_gate_replay_is_effectively_once(spark, tmp_path):
         store,
     )
     batch_secs: list = []
-    first = pipeline.run_streaming_video_dedup(
-        spark, str(src), store, dec, checkpoint_dir=str(tmp_path / "c1"),
+    first = pipeline.run_streaming_media_dedup(
+        spark, "video", str(src), store, dec,
+        checkpoint_dir=str(tmp_path / "c1"),
         batch_secs=batch_secs,
     ).orderBy("media_id").collect()
     # one addBatch duration per data trigger (two source files)
@@ -1379,8 +1378,9 @@ def test_streaming_video_gate_replay_is_effectively_once(spark, tmp_path):
         for r in vt.read_version(spark, store).collect()
     )
     # replay everything with a FRESH checkpoint
-    second = pipeline.run_streaming_video_dedup(
-        spark, str(src), store, dec, checkpoint_dir=str(tmp_path / "c2")
+    second = pipeline.run_streaming_media_dedup(
+        spark, "video", str(src), store, dec,
+        checkpoint_dir=str(tmp_path / "c2"),
     ).orderBy("media_id").collect()
     store_v2 = sorted(
         (r["media_id"], r["vfp"])

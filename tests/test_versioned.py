@@ -107,18 +107,22 @@ def test_uncommitted_data_is_invisible(spark, tmp_path):
 
 def test_versioned_merge_contract(spark, tmp_path):
     path = str(tmp_path / "t")
-    vt.write_version(_df(spark, [(1, "a"), (2, "b")]), path)
-    v2 = merge.versioned_merge(
-        spark, path, _df(spark, [(2, "B"), (3, "C")]), ["k"], update=True
+    v1 = merge.append_if_absent(
+        spark, path, _df(spark, [(1, "a"), (2, "b")]), ["k"]
+    )
+    assert v1 == 1
+    v2 = merge.append_if_absent(
+        spark, path, _df(spark, [(2, "ignored"), (3, "C")]), ["k"]
     )
     assert v2 == 2
-    got = {r["k"]: r["v"] for r in vt.read_version(spark, path).collect()}
-    assert got == {1: "a", 2: "B", 3: "C"}
-    v3 = merge.versioned_merge(
-        spark, path, _df(spark, [(3, "ignored"), (4, "D")]), ["k"], update=False
+    got = {r["k"]: r["v"] for r in vt.read_version(spark, path, v2).collect()}
+    assert got == {1: "a", 2: "b", 3: "C"}
+    # a replay of the same rows commits no new keys
+    v3 = merge.append_if_absent(
+        spark, path, _df(spark, [(2, "ignored"), (3, "C")]), ["k"]
     )
     got = {r["k"]: r["v"] for r in vt.read_version(spark, path, v3).collect()}
-    assert got == {1: "a", 2: "B", 3: "C", 4: "D"}
+    assert got == {1: "a", 2: "b", 3: "C"}
     # pre-merge snapshot still intact
     assert {r["v"] for r in vt.read_version(spark, path, 1).collect()} == {"a", "b"}
 

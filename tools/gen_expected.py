@@ -2186,7 +2186,8 @@ def gen_image_dedup_survivors(
 ) -> pd.DataFrame:
     """Union-find over the brute-force dHash pair set: min-id survivor
     per component with member count, singletons at n_merged=1 — the
-    independent replica of operators/dedup.py:image_dedup_survivors."""
+    independent replica of operators/dedup.py:media_dedup_survivors
+    (modality "image")."""
     pairs = gen_image_dhash_dups(groups, max_hamming)
     ids = list(range(1, groups * 3 + 1))
     parent = {i: i for i in ids}
@@ -2214,8 +2215,8 @@ def gen_image_dedup_survivors(
 def gen_image_dhash_incremental(
     groups: int = 16, max_hamming: int = 3
 ) -> pd.DataFrame:
-    """Brute-force replica of operators/dedup.py:image_dhash_incremental
-    over the registered split: EVEN groups' base images (media_id%6==1)
+    """Brute-force replica of operators/dedup.py:media_incremental
+    (modality "image") over the registered split: EVEN groups' base images (media_id%6==1)
     are the persisted hash store; everything else is the incoming
     batch — so even-group variants exercise the store-hit path,
     odd-group variants the batch-internal path, and odd-group BASES
@@ -2250,7 +2251,7 @@ def gen_streaming_image_dedup(
     groups: int = 16, max_hamming: int = 3
 ) -> pd.DataFrame:
     """Sequential two-micro-batch replica of the streaming image
-    dedup gate (streaming/pipeline.py:run_streaming_image_dedup):
+    dedup gate (streaming/pipeline.py:run_streaming_media_dedup, "image"):
     store seeded with even-group BASE hashes (media_id%6==1);
     batch 1 = even-group v1 + odd-group bases (%6 in {2,4});
     batch 2 = even-group v2 + odd-group v1/v2 (%6 in {3,5,0}).
@@ -2268,7 +2269,7 @@ def gen_streaming_video_dedup(
     groups: int = 12, max_hamming: int = 4
 ) -> pd.DataFrame:
     """Sequential two-micro-batch replica of the streaming VIDEO
-    dedup gate (streaming/pipeline.py:run_streaming_video_dedup) —
+    dedup gate (streaming/pipeline.py:run_streaming_media_dedup, "video") —
     the image gate's split and min-id semantics over independently
     recomputed temporal fingerprints (:func:`_vfp_replica`)."""
     fps = gen_video_fingerprint(groups)
@@ -2327,7 +2328,8 @@ def gen_audio_dedup_survivors(
 ) -> pd.DataFrame:
     """Union-find over the brute-force audio fingerprint pair set —
     the independent replica of operators/dedup.py:
-    audio_dedup_survivors (same union-find as the image twin)."""
+    media_dedup_survivors, modality "audio" (same union-find as the
+    image twin)."""
     pairs = gen_audio_fingerprint_dups(groups, max_hamming)
     ids = list(range(1, groups * 3 + 1))
     parent = {i: i for i in ids}
@@ -2356,7 +2358,7 @@ def gen_audio_fp_incremental(
     groups: int = 16, max_hamming: int = 3
 ) -> pd.DataFrame:
     """Brute-force replica of operators/dedup.py:
-    audio_fingerprint_incremental over the registered split — same
+    media_incremental (modality "audio") over the registered split — same
     store/batch partition rule as the image twin (even-group bases =
     store, media_id%6==1)."""
     fps = gen_audio_fingerprint(groups)
@@ -2452,7 +2454,8 @@ def gen_video_dedup_survivors(
 ) -> pd.DataFrame:
     """Union-find over the brute-force video fingerprint pair set —
     the independent replica of operators/dedup.py:
-    video_dedup_survivors (same union-find as the image/audio twins)."""
+    media_dedup_survivors, modality "video" (same union-find as the
+    image/audio twins)."""
     pairs = gen_video_fingerprint_dups(groups, max_hamming)
     ids = list(range(1, groups * 3 + 1))
     parent = {i: i for i in ids}
@@ -2481,7 +2484,7 @@ def gen_video_fp_incremental(
     groups: int = 12, max_hamming: int = 4
 ) -> pd.DataFrame:
     """Brute-force replica of operators/dedup.py:
-    video_fingerprint_incremental over the registered split — same
+    media_incremental (modality "video") over the registered split — same
     store/batch partition rule as the image/audio twins (even-group
     bases = store, media_id%6==1)."""
     fps = gen_video_fingerprint(groups)

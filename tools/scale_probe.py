@@ -19,6 +19,7 @@ import os
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -857,38 +858,25 @@ def main() -> None:
             ).parquet(path)
             fixtures[(kind, tag)] = spark.read.parquet(path)
 
-    hash_tables = {
-        "image": mm.dhash_table,
-        "audio": mm.audio_fingerprint_table,
-        "video": mm.video_fingerprint_table,
-    }
-    near_dups = {
-        "image": dedup.image_dhash_near_dups,
-        "audio": dedup.audio_fingerprint_near_dups,
-        "video": dedup.video_fingerprint_near_dups,
-    }
-    survivors = {
-        "image": dedup.image_dedup_survivors,
-        "audio": dedup.audio_dedup_survivors,
-        "video": dedup.video_dedup_survivors,
-    }
-    incrementals = {
-        "image": dedup.image_dhash_incremental,
-        "audio": dedup.audio_fingerprint_incremental,
-        "video": dedup.video_fingerprint_incremental,
-    }
     media_results: dict[str, dict] = {}
     media_pairs: dict[str, dict] = {}
     for kind in base_groups:
         d_s, d_b = fixtures[(kind, "1x")], fixtures[(kind, big_tag)]
         n_s, n_b = d_s.count(), d_b.count()
         ops_m = {
-            f"media_{kind}_hash_table": hash_tables[kind],
-            f"media_{kind}_near_dups": near_dups[kind],
-            f"media_{kind}_survivors": survivors[kind],
-            f"media_{kind}_incremental": lambda d, k=kind: incrementals[k](
-                d.filter(F.col("media_id") % 6 == 1),
-                d.filter(F.col("media_id") % 6 != 1),
+            f"media_{kind}_hash_table": dedup.MEDIA_FINGERPRINTS[kind].table,
+            f"media_{kind}_near_dups": partial(
+                dedup.media_near_dups, modality=kind
+            ),
+            f"media_{kind}_survivors": partial(
+                dedup.media_dedup_survivors, modality=kind
+            ),
+            f"media_{kind}_incremental": lambda d, k=kind: (
+                dedup.media_incremental(
+                    d.filter(F.col("media_id") % 6 == 1),
+                    d.filter(F.col("media_id") % 6 != 1),
+                    k,
+                )
             ),
         }
         for name, fn in ops_m.items():
@@ -911,8 +899,8 @@ def main() -> None:
                     b_t / max(n_b, 1), 4
                 )
             media_results[name] = entry
-        p_s = near_dups[kind](d_s).count()
-        p_b = near_dups[kind](d_b).count()
+        p_s = dedup.media_near_dups(d_s, kind).count()
+        p_b = dedup.media_near_dups(d_b, kind).count()
         r = media_results[f"media_{kind}_near_dups"]
         media_pairs[f"media_{kind}_near_dups"] = {
             "pairs_1x": p_s,
